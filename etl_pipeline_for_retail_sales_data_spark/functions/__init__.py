@@ -21,11 +21,6 @@ def cents(c: Column) -> Column:
     return F.floor(c * 100 + F.lit(0.5)) / 100
 
 
-def sql_cents(expr: str) -> str:
-    """Oracle-side twin of ``cents``."""
-    return f"FLOOR(({expr}) * 100 + 0.5) / 100"
-
-
 def spread(df, min_partitions: int | None = None):
     """Repartition a DataFrame up to the cluster's parallelism when its
     scan produced too few splits. A small parquet file arrives as ONE

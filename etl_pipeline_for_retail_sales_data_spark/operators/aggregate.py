@@ -1,4 +1,4 @@
-"""Aggregations (SURVEY.md §2.6) and grouping-set extensions.
+"""Aggregations (SURVEY.md §2.6).
 
 A1 is one hash aggregation; Spark plans partial (map-side) + final agg
 around a single exchange hash-partitioned on the group key — the optimal
@@ -31,14 +31,3 @@ def summary_ordered(df: DataFrame) -> DataFrame:
     """Pandas groupby sorts by key (SURVEY.md §2.6 hidden semantic) —
     explicit orderBy for golden-file parity."""
     return df.orderBy("product_id")
-
-
-def rollup_sales(df: DataFrame, keys: list[str], value_columns: dict[str, str]) -> DataFrame:
-    """GROUP BY ROLLUP extension: subtotals along the key hierarchy."""
-    aggs = [F.round(F.sum(src), 2).alias(dst) for dst, src in value_columns.items()]
-    return df.rollup(*keys).agg(*aggs)
-
-
-def cube_sales(df: DataFrame, keys: list[str], value_columns: dict[str, str]) -> DataFrame:
-    aggs = [F.round(F.sum(src), 2).alias(dst) for dst, src in value_columns.items()]
-    return df.cube(*keys).agg(*aggs)

@@ -47,6 +47,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .dedup import posting_pairs
+
 LANDMARK_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -257,33 +259,27 @@ def audio_fingerprint_candidates(
     (~(frame_len/2)² · n_targets ≈ 460k keys at the defaults): mean
     postings per key grow slowly with corpus size, so a fixed cap trims
     only the pathological tail rather than the working mass. Returns
-    (id_a, id_b). Shuffles: ONE repartition on lm_hash that every
-    consumer reuses (the posting count is a window over that
-    partitioning, the ngram_jaccard_pairs_salted pattern — no
-    aggregate+join, no second Arrow pass), then the pair aggregation."""
-    from pyspark.sql import Window
-
+    (id_a, id_b). Shuffles: the :func:`dedup.posting_pairs` repartition
+    on lm_hash (the posting count is a window over it, and the join's
+    second side is a reused exchange — no second Arrow pass), then the
+    pair aggregation."""
     if min_matches is None:
         min_matches = landmark_count(n_frames, n_targets) // 2
-    lm = (
-        audio_landmark_signatures(
-            df,
-            id_col=id_col,
-            group_size=group_size,
-            n_frames=n_frames,
-            frame_len=frame_len,
-            n_targets=n_targets,
-        )
-        .repartition("lm_hash")
-        .withColumn("__pf", F.count("*").over(Window.partitionBy("lm_hash")))
-        .filter(F.col("__pf") <= max_postings)
+    lm = audio_landmark_signatures(
+        df,
+        id_col=id_col,
+        group_size=group_size,
+        n_frames=n_frames,
+        frame_len=frame_len,
+        n_targets=n_targets,
     )
-    a = lm.select("lm_hash", F.col("doc_id").alias("id_a"), F.col("t").alias("t_a"))
-    b = lm.select("lm_hash", F.col("doc_id").alias("id_b"), F.col("t").alias("t_b"))
     return (
-        a.join(b, "lm_hash")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", (F.col("t_b") - F.col("t_a")).alias("__off"))
+        posting_pairs(lm, "lm_hash", ["t"], max_df=max_postings)
+        .groupBy(
+            F.col("doc_a").alias("id_a"),
+            F.col("doc_b").alias("id_b"),
+            (F.col("t_b") - F.col("t_a")).alias("__off"),
+        )
         .agg(F.count("*").alias("__n"))
         .groupBy("id_a", "id_b")
         .agg(F.max("__n").alias("__best"))

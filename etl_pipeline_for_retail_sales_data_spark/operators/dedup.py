@@ -185,6 +185,107 @@ def doc_shingle_arrays(
     )
 
 
+def posting_pairs(
+    postings: DataFrame,
+    key: str,
+    carry: list[str],
+    *,
+    max_df: int | None = None,
+    hot_df: int | str | None = None,
+    n_salts: int = 16,
+    directed: bool = False,
+) -> DataFrame:
+    """The inverted-index self-join every pair family shares: one row per
+    (doc pair, shared posting) from a ``(doc_id, key, *carry)`` postings
+    frame, as ``(doc_a, doc_b, <c>_a, <c>_b for c in carry)``. Pairs are
+    ``doc_a < doc_b``, or both orders (``doc_a != doc_b``) when
+    ``directed``. Callers aggregate the rows per pair into their score;
+    per-doc values the score needs (set sizes, norms, timestamps) ride
+    ``carry`` so the pair frame never joins back to a per-doc frame.
+
+    Plan shape. The postings are ``repartition(key)``-ed ONCE and every
+    branch inherits that partitioning: the document frequency is a window
+    count over it (no aggregate+join, no new exchange, and only added
+    when ``max_df`` or ``hot_df`` needs it), and the self-join runs on
+    the pre-partitioned sides. The join is A/B-aliased over one frame,
+    so both sides prune to the same column set and AQE stage reuse reads
+    the second side from the first side's shuffle: the postings stage
+    (Arrow shingling, landmark decode, fingerprint hashing) computes once
+    at runtime. Nothing is persisted; shuffle files are auto-cleaned
+    (cachectl.py documents the discipline).
+
+    ``max_df``: the hot-key cap. A key present in d documents contributes
+    O(d²) pair rows, so keys with document frequency > max_df are dropped
+    before the join. This undercounts shared postings (scores become
+    lower bounds; carried sizes stay exact).
+
+    ``hot_df``: the recall-lossless alternative to the cap. Keys with
+    document frequency <= ``hot_df`` take the plain join; hotter keys take
+    a salted skew join: the left side gets ONE salt
+    (xxhash64(doc_id) % n_salts), the right side is replicated to ALL
+    salts, and the join key becomes (key, salt). Every co-occurring pair
+    still meets exactly once, but the worst per-reduce-key fan-out drops
+    from d² to d²/n_salts. Both paths are exact, so the threshold only
+    moves where the shuffle work lands. ``hot_df="p99"`` makes it
+    adaptive (keys above the 99th percentile of document frequency go
+    hot) at the cost of one bounded eager job at construction: the
+    frame is ``shared_frame``-checkpointed so the percentile probe and
+    the returned plan read one materialization. An integer keeps
+    construction fully lazy."""
+    from pyspark.sql import Window
+
+    def side(frame, tag, *extra):
+        return frame.select(
+            F.col("doc_id").alias(f"doc_{tag}"),
+            key,
+            *[F.col(c).alias(f"{c}_{tag}") for c in carry],
+            *extra,
+        )
+
+    def doc_order(a, b):
+        return a != b if directed else a < b
+
+    sh = postings.repartition(key)
+    if max_df is not None or hot_df is not None:
+        sh = sh.withColumn("__df", F.count("*").over(Window.partitionBy(key)))
+    if max_df is not None:
+        sh = sh.filter(F.col("__df") <= max_df)
+    if hot_df == "p99":
+        sh = shared_frame(sh)
+        # exact percentile over the (small) per-key df frame; one scalar
+        # to the driver. No postings → no keys → 0 threshold.
+        dfreq = sh.groupBy(key).agg(F.first("__df").alias("__df"))
+        row = dfreq.agg(F.expr("percentile(__df, 0.99)").alias("p")).collect()[0]
+        hot_df = int(row["p"]) if row["p"] is not None else 0
+    elif hot_df is not None and not isinstance(hot_df, int):
+        raise ValueError(f"hot_df must be an int or 'p99', got {hot_df!r}")
+
+    cold = sh if hot_df is None else sh.filter(F.col("__df") <= hot_df)
+    a = cold.alias("A")
+    b = cold.alias("B")
+    pairs = (
+        a.join(b, F.col(f"A.{key}") == F.col(f"B.{key}"))
+        .filter(doc_order(F.col("A.doc_id"), F.col("B.doc_id")))
+        .select(
+            F.col("A.doc_id").alias("doc_a"),
+            F.col("B.doc_id").alias("doc_b"),
+            *[F.col(f"{t.upper()}.{c}").alias(f"{c}_{t}") for c in carry for t in "ab"],
+        )
+    )
+    if hot_df is None:
+        return pairs
+
+    hot = sh.filter(F.col("__df") > hot_df)
+    salt = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_salts)).cast("int")
+    a_hot = side(hot, "a", salt.alias("salt"))
+    all_salts = F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
+    b_hot = side(hot, "b", all_salts.alias("salt"))
+    hot_pairs = a_hot.join(b_hot, [key, "salt"]).filter(
+        doc_order(F.col("doc_a"), F.col("doc_b"))
+    )
+    return pairs.unionByName(hot_pairs.select(*pairs.columns))
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -195,210 +296,30 @@ def ngram_jaccard_pairs(
     n_salts: int = 16,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for all co-occurring doc pairs via
-    inverted-index self-join (no cross join anywhere). The shingle frame
-    feeds three plan branches (the df-cap + both join sides): it is
-    ``repartition("shingle")``-ed ONCE and every branch inherits that
-    partitioning — the df-cap becomes a window count (no join, no new
-    exchange) and the self-join runs exchange-free on the pre-partitioned
-    sides. The map-only shingling stage computes ONCE at runtime: the
-    two join sides prune to the same column set, so AQE stage reuse
-    matches their canonicalized exchanges (r12 accumulator-verified —
-    r11's "computes once per side" reading came from counting
-    MapInPandas nodes in the PRE-reuse initial plan). Alternatives
-    measured and rejected: in-row pair explosion ~10-15% slower (r11);
-    eager checkpoint of the shingle frame slower still (r12 — pure
-    write+read cost once reuse is known to fire). No ``persist()``:
-    shuffle files are auto-cleaned and cost no executor storage pool,
-    so a long-lived session never accumulates dead cached frames
-    (cachectl.py documents the repo-wide discipline).
+    the inverted-index self-join on shingle (:func:`posting_pairs`; no
+    cross join anywhere). The per-doc set size rides along on every
+    shingle row (computed locally in the Arrow pass), so the pair frame
+    never joins back to a sizes frame.
 
-    ``max_df``: the hot-shingle cap. A shingle present in d documents
-    contributes O(d²) join pairs; at corpus scale stop-phrase shingles
-    dominate the shuffle. Dropping shingles with document frequency >
-    max_df bounds the per-shingle fan-out. This UNDERCOUNTS intersections
-    (Jaccard becomes a lower bound; sizes stay exact), so it is a
-    documented recall/cost lever — ON by default (256) so direct callers
-    are skew-safe. ``max_df=None`` — the EXACT form — now routes through
-    :func:`ngram_jaccard_pairs_salted` (r9 verdict #6): identical
-    output, but hot shingles take the salted skew join, so one
-    stop-phrase shingle can no longer pin a single reducer at web
-    scale. ``hot_df``/``n_salts`` forward to the salted twin on that
-    path (ignored when ``max_df`` is set — the cap already bounds the
-    fan-out). NOTE: the salted path's default ``hot_df="p99"`` runs one
-    bounded eager Spark job at plan-construction time (the
+    ``max_df``: the hot-shingle cap, ON by default (256) so direct
+    callers are skew-safe. It undercounts intersections (Jaccard becomes
+    a lower bound; sizes stay exact). ``max_df=None`` is the EXACT form:
+    hot shingles (document frequency above ``hot_df``) take the salted
+    skew join over ``n_salts`` reduce keys instead of being dropped, with
+    identical output to the plain uncapped join. ``hot_df``/``n_salts``
+    are ignored when ``max_df`` is set. The default ``hot_df="p99"`` runs
+    one bounded eager Spark job at plan-construction time (the
     document-frequency percentile probe); pass an integer ``hot_df`` to
-    keep construction fully lazy. EVERY default path is therefore
-    skew-safe; the plain (skew-exposed) shape remains reachable for A/B
-    measurement as ``ngram_jaccard_pairs_salted(hot_df=<huge>)`` — a
-    threshold no document frequency reaches sends everything down the
-    cold inverted-index path (SCALING.md).
-
-    The per-doc set size rides along on every shingle row (computed
-    locally in the Arrow pass, 8 extra bytes/row in the join shuffle) so
-    the pair frame never joins back to a sizes frame — two shuffled
-    joins removed vs the textbook inverted-index formulation, measured
-    ~15% on the sf0.1 bench."""
-    from pyspark.sql import Window
-
-    if max_df is None:
-        # exact + skew-safe: the salted twin is output-identical to the
-        # uncapped inverted-index join (same oracle) with the hot-key
-        # fan-out spread over n_salts reduce keys
-        return ngram_jaccard_pairs_salted(
-            df,
-            text_col=text_col,
-            n=n,
-            threshold=threshold,
-            hot_df=hot_df,
-            n_salts=n_salts,
-        )
-
-    sh = doc_shingles_arrow(df, text_col, n, with_size=True).repartition("shingle")
+    keep construction fully lazy, or one no document frequency reaches
+    to send every shingle down the plain join (SCALING.md)."""
+    sh = doc_shingles_arrow(df, text_col, n, with_size=True)
     if max_df is not None:
-        # df-cap as a window count over the shingle partitioning already
-        # in place: zero extra exchanges vs the aggregate+join form
-        sh = sh.withColumn(
-            "__df", F.count("*").over(Window.partitionBy("shingle"))
-        ).filter(F.col("__df") <= max_df)
-    # NOTE (r12, measured): the aliased self-join below computes the
-    # Arrow shingling ONCE at runtime — AQE stage reuse matches the two
-    # sides' canonicalized exchanges (both prune to the identical
-    # (doc_id, shingle, n_sh, __df) column set). Verified with a
-    # row-count accumulator inside the Arrow stage (500 docs → 500
-    # processed), and an eager-checkpoint variant measured SLOWER
-    # (plans/r12/ab_shared_frame.json — write+read of the shingle frame
-    # buys nothing when reuse already fires). The initial explain()
-    # shows 2 MapInPandas nodes, but that is pre-reuse plan text, not
-    # executed work.
-    a = sh.alias("A")
-    b = sh.alias("B")
-    inter = (
-        a.join(b, F.col("A.shingle") == F.col("B.shingle"))
-        .filter(F.col("A.doc_id") < F.col("B.doc_id"))
-        .select(
-            F.col("A.doc_id").alias("doc_a"),
-            F.col("B.doc_id").alias("doc_b"),
-            F.col("A.n_sh").alias("n_a"),
-            F.col("B.n_sh").alias("n_b"),
-        )
-        .groupBy("doc_a", "doc_b", "n_a", "n_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    jac = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-    return (
-        inter.withColumn("jaccard", F.floor(jac * 1e6 + F.lit(0.5)) / 1e6)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "n_inter", "n_a", "n_b", "jaccard")
-    )
-
-
-def ngram_jaccard_pairs_salted(
-    df: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-    hot_df: int | str = "p99",
-    n_salts: int = 16,
-) -> DataFrame:
-    """EXACT n-gram Jaccard (identical output to
-    ``ngram_jaccard_pairs(max_df=None)``) with the hot-shingle skew
-    defused by salting instead of dropping — the recall-lossless
-    alternative to the ``max_df`` cap.
-
-    Shingles with document frequency <= ``hot_df`` go through the normal
-    inverted-index equi-join. Hot shingles go through a salted skew join:
-    the left side gets ONE salt (hash(doc_id) % n_salts), the right side
-    is replicated to ALL salts, and the join key becomes
-    (shingle, salt) — every co-occurring pair still meets exactly once
-    (at the left doc's salt), but the worst per-reduce-key fan-out drops
-    from d² to d²/n_salts, so one stop-phrase shingle can no longer pin
-    a single reducer. Total work is unchanged (the d² pairs still
-    exist); what salting buys is that the work spreads over n_salts
-    reduce keys, which is exactly what a 1000-executor shuffle needs.
-    Intersections aggregate across both paths in one groupBy, so the
-    Jaccard values are bit-identical to the uncapped exact form
-    (oracle-verified in the registry).
-
-    ``hot_df``: integer threshold, or the default ``"p99"`` — adaptive:
-    hot = shingles above the 99th percentile of document frequency, so
-    roughly the top 1% hottest keys take the salted path at ANY corpus
-    scale (a fixed constant either never fires on a small corpus or
-    drowns a dense one). The threshold choice cannot affect results —
-    both paths are exact — only where the shuffle work lands."""
-    from pyspark.sql import Window
-
-    # one repartition by shingle; the per-shingle document frequency is a
-    # window count over that partitioning (no aggregate+join), and the
-    # hot/cold split becomes a plain FILTER on the carried __df — the
-    # broadcast semi/anti probes of the old formulation vanish. All four
-    # collect-time consumers (cold A/B, hot A/B) read ONE materialization
-    # of this frame: AQE stage reuse within the main execution, plus (on
-    # the default p99 path) the shared_frame checkpoint below so the
-    # probe execution reads it too. Nothing is persisted (cachectl.py).
-    sh = (
-        doc_shingles_arrow(df, text_col, n, with_size=True)
-        .repartition("shingle")
-        .withColumn("__df", F.count("*").over(Window.partitionBy("shingle")))
-    )
-    if hot_df == "p99":
-        # r12: the p99 probe is its own Spark execution, so AQE stage
-        # reuse (which deduplicates the four hot/cold join sides WITHIN
-        # the main execution — accumulator-verified) cannot help it: the
-        # probe re-ran the whole Arrow shingle pass + window. One eager
-        # reliable checkpoint (cachectl.shared_frame) feeds the probe
-        # AND the main plan — the shingle stage runs exactly once per
-        # query (A/B: 1.5x on this query, 1.4x on the canonical
-        # pipeline, plans/r12/ab_ppjoin_salted.json). Integer-hot_df
-        # callers skip probe and checkpoint: construction stays fully
-        # lazy (pinned by test_exact_form_forwards_salt_kwargs) and the
-        # single execution already shares the exchange at runtime.
-        sh = shared_frame(sh)
-        # exact percentile over the (small) per-shingle df frame; one
-        # scalar to the driver. Empty corpus → no shingles → 0 threshold.
-        dfreq = sh.groupBy("shingle").agg(F.first("__df").alias("__df"))
-        row = dfreq.agg(F.expr("percentile(__df, 0.99)").alias("p")).collect()[0]
-        hot_df = int(row["p"]) if row["p"] is not None else 0
-    elif not isinstance(hot_df, int):
-        raise ValueError(f"hot_df must be an int or 'p99', got {hot_df!r}")
-    sh_cold = sh.filter(F.col("__df") <= hot_df)
-    sh_hot = sh.filter(F.col("__df") > hot_df)
-
-    a_cold = sh_cold.alias("A")
-    b_cold = sh_cold.alias("B")
-    cold_pairs = (
-        a_cold.join(b_cold, F.col("A.shingle") == F.col("B.shingle"))
-        .filter(F.col("A.doc_id") < F.col("B.doc_id"))
-        .select(
-            F.col("A.doc_id").alias("doc_a"),
-            F.col("B.doc_id").alias("doc_b"),
-            F.col("A.n_sh").alias("n_a"),
-            F.col("B.n_sh").alias("n_b"),
-        )
-    )
-
-    salt = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_salts)).cast("int")
-    a_hot = sh_hot.select(
-        F.col("doc_id").alias("doc_a"),
-        "shingle",
-        F.col("n_sh").alias("n_a"),
-        salt.alias("salt"),
-    )
-    b_hot = sh_hot.select(
-        F.col("doc_id").alias("doc_b"),
-        "shingle",
-        F.col("n_sh").alias("n_b"),
-        F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))).alias("salt"),
-    )
-    hot_pairs = a_hot.join(b_hot, ["shingle", "salt"]).filter(
-        F.col("doc_a") < F.col("doc_b")
-    )
-
-    contrib = cold_pairs.unionByName(
-        hot_pairs.select("doc_a", "doc_b", "n_a", "n_b")
-    )
-    inter = contrib.groupBy("doc_a", "doc_b", "n_a", "n_b").agg(
-        F.count("*").alias("n_inter")
-    )
+        pairs = posting_pairs(sh, "shingle", ["n_sh"], max_df=max_df)
+    else:
+        pairs = posting_pairs(sh, "shingle", ["n_sh"], hot_df=hot_df, n_salts=n_salts)
+    inter = pairs.groupBy(
+        "doc_a", "doc_b", F.col("n_sh_a").alias("n_a"), F.col("n_sh_b").alias("n_b")
+    ).agg(F.count("*").alias("n_inter"))
     jac = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
     return (
         inter.withColumn("jaccard", F.floor(jac * 1e6 + F.lit(0.5)) / 1e6)
@@ -423,32 +344,16 @@ def containment_pairs(
     of the web). Extension tier: the reference has no similarity ops
     (SURVEY.md §2).
 
-    Same inverted-index shape as :func:`ngram_jaccard_pairs` (shingle
-    equi-join, never a cross join; sizes ride the shingle rows), but
-    pairs are DIRECTED (doc_a != doc_b, both orders) because containment
-    is asymmetric. ``max_df`` is the identical hot-shingle fan-out cap.
-    The threshold compare happens on the 1e-6-floored value so Spark and
-    the SQL oracle agree bit-for-bit."""
-    from pyspark.sql import Window
-
-    # same reuse-not-cache shape as ngram_jaccard_pairs: one repartition
-    # by shingle, window df-cap, exchange-free aliased self-join
-    sh = doc_shingles_arrow(df, text_col, n, with_size=True).repartition("shingle")
-    if max_df is not None:
-        sh = sh.withColumn(
-            "__df", F.count("*").over(Window.partitionBy("shingle"))
-        ).filter(F.col("__df") <= max_df)
-    a = sh.alias("A")
-    b = sh.alias("B")
+    Same inverted-index join as :func:`ngram_jaccard_pairs`
+    (:func:`posting_pairs`), but pairs are DIRECTED (doc_a != doc_b, both
+    orders) because containment is asymmetric. ``max_df`` is the
+    identical hot-shingle fan-out cap. The threshold compare happens on
+    the 1e-6-floored value so Spark and the SQL oracle agree
+    bit-for-bit."""
+    sh = doc_shingles_arrow(df, text_col, n, with_size=True)
     inter = (
-        a.join(b, F.col("A.shingle") == F.col("B.shingle"))
-        .filter(F.col("A.doc_id") != F.col("B.doc_id"))
-        .select(
-            F.col("A.doc_id").alias("doc_a"),
-            F.col("B.doc_id").alias("doc_b"),
-            F.col("A.n_sh").alias("n_a"),
-        )
-        .groupBy("doc_a", "doc_b", "n_a")
+        posting_pairs(sh, "shingle", ["n_sh"], max_df=max_df, directed=True)
+        .groupBy("doc_a", "doc_b", F.col("n_sh_a").alias("n_a"))
         .agg(F.count("*").alias("n_inter"))
     )
     cont = F.col("n_inter") / F.col("n_a")
@@ -1038,35 +943,14 @@ def shingle_cosine_pairs(
     division is one float op — so the score is bit-reproducible across
     engines with no sequential-fold choreography at all.
 
-    Scale shape: identical to ngram_jaccard_pairs — inverted-index
-    self-equi-join on shingle, one pair-keyed aggregate, with the
-    ``max_df`` hot-shingle cap ON by default (dropping a capped shingle
-    only LOWERS the numerator: the score is a lower bound, sizes stay
-    exact; pass None for the exact form)."""
-    from pyspark.sql import Window
-
-    # reuse-not-cache shape (see ngram_jaccard_pairs): one repartition by
-    # shingle, window df-cap, aliased self-join whose two sides prune to
-    # the same columns — AQE stage reuse runs the Arrow tf pass once
-    # (r12 accumulator-verified; eager checkpoint measured slower)
-    sh = doc_shingle_tf(df, text_col, n).repartition("shingle")
-    if max_df is not None:
-        sh = sh.withColumn(
-            "__df", F.count("*").over(Window.partitionBy("shingle"))
-        ).filter(F.col("__df") <= max_df)
-    a = sh.alias("A")
-    b = sh.alias("B")
+    Scale shape: the :func:`posting_pairs` self-join on shingle with tf
+    and the squared norm carried, then one pair-keyed aggregate. The
+    ``max_df`` hot-shingle cap is ON by default (dropping a capped
+    shingle only LOWERS the numerator: the score is a lower bound, norms
+    stay exact; pass None for the exact form)."""
+    tf = doc_shingle_tf(df, text_col, n)
     pairs = (
-        a.join(b, F.col("A.shingle") == F.col("B.shingle"))
-        .filter(F.col("A.doc_id") < F.col("B.doc_id"))
-        .select(
-            F.col("A.doc_id").alias("doc_a"),
-            F.col("B.doc_id").alias("doc_b"),
-            F.col("A.tf").alias("tf_a"),
-            F.col("B.tf").alias("tf_b"),
-            F.col("A.nsq").alias("nsq_a"),
-            F.col("B.nsq").alias("nsq_b"),
-        )
+        posting_pairs(tf, "shingle", ["tf", "nsq"], max_df=max_df)
         .groupBy("doc_a", "doc_b", "nsq_a", "nsq_b")
         .agg(F.sum(F.col("tf_a") * F.col("tf_b")).alias("num"))
     )
@@ -1173,43 +1057,18 @@ def winnowing_overlap_pairs(
     a smaller doc inside a bigger one score ~1.0 even when whole-doc
     measures (Jaccard over all shingles) dilute toward 0.
 
-    Scale shape: the family's inverted-index discipline — fingerprint
-    sets are ~1/w of the shingle sets, so the self-equi-join moves ~w×
+    Scale shape: the :func:`posting_pairs` self-join on fingerprint.
+    Fingerprint sets are ~1/w of the shingle sets, so the join moves ~w×
     less data than ngram_jaccard_pairs for the same corpus; per-doc set
-    sizes ride along on the fingerprint rows (no sizes join); hot
-    fingerprints capped by ``max_df`` ON by default (containment becomes
-    a lower bound; pass None for exact)."""
-    from pyspark.sql import Window
-
-    # n_fp rides out of the map-only fingerprint pass (with_size=True):
-    # the former groupBy(doc_id)+collect_list+re-explode round trip was
-    # a full corpus shuffle spent recomputing a size already known
-    # per-document before the explode (r11, guide §2.1 — one Exchange
-    # removed from the plan; measured on the sf0.1 noop bench)
+    sizes ride the fingerprint rows (``with_size=True``, no sizes
+    join); hot fingerprints are capped by ``max_df``, ON by default
+    (containment becomes a lower bound; pass None for exact)."""
     fp = winnowing_fingerprints(df, text_col, k, w, with_size=True)
-    # reuse-not-cache shape (see ngram_jaccard_pairs): one repartition by
-    # fingerprint, window df-cap, aliased self-join whose two sides
-    # prune to the same columns — AQE stage reuse runs the md5/regexp
-    # fingerprint stage once (r12 accumulator-verified; an eager
-    # checkpoint of this frame measured 3x SLOWER — the JVM chain
-    # recomputes cheaper than the frame writes)
-    fp = fp.repartition("fp")
-    if max_df is not None:
-        fp = fp.withColumn(
-            "__df", F.count("*").over(Window.partitionBy("fp"))
-        ).filter(F.col("__df") <= max_df)
-    a = fp.alias("A")
-    b = fp.alias("B")
     inter = (
-        a.join(b, F.col("A.fp") == F.col("B.fp"))
-        .filter(F.col("A.doc_id") < F.col("B.doc_id"))
-        .select(
-            F.col("A.doc_id").alias("doc_a"),
-            F.col("B.doc_id").alias("doc_b"),
-            F.col("A.n_fp").alias("n_a"),
-            F.col("B.n_fp").alias("n_b"),
+        posting_pairs(fp, "fp", ["n_fp"], max_df=max_df)
+        .groupBy(
+            "doc_a", "doc_b", F.col("n_fp_a").alias("n_a"), F.col("n_fp_b").alias("n_b")
         )
-        .groupBy("doc_a", "doc_b", "n_a", "n_b")
         .agg(F.count("*").alias("n_shared"))
     )
     score = F.col("n_shared") / F.least(F.col("n_a"), F.col("n_b"))

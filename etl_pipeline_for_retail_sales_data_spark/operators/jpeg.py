@@ -273,11 +273,6 @@ def _to_blocks(plane: np.ndarray) -> tuple[np.ndarray, int, int]:
     return blocks, bh, bw
 
 
-def _from_blocks(blocks: np.ndarray, bh: int, bw: int, h: int, w: int) -> np.ndarray:
-    full = blocks.reshape(bh, bw, 8, 8).transpose(0, 2, 1, 3).reshape(bh * 8, bw * 8)
-    return full[:h, :w]
-
-
 # ---------------------------------------------------------------------------
 # encoder
 # ---------------------------------------------------------------------------

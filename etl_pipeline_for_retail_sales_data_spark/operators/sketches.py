@@ -374,14 +374,6 @@ def bloom_bit(key: Column, seed: int, m: int) -> Column:
     return F.conv(F.substring(h, 1, 6), 16, 10).cast("long") % m
 
 
-def bloom_bit_sql(key_expr: str, seed: int, m: int) -> str:
-    """Oracle twin of :func:`bloom_bit`."""
-    return (
-        f"CAST(('0x' || substring(md5('{seed}:' || CAST({key_expr} AS VARCHAR)), 1, 6)) "
-        f"AS BIGINT) % {m}"
-    )
-
-
 def bloom_positions(df: DataFrame, key: str, k: int = 5, m: int = 4096) -> DataFrame:
     """The filter as its set-bit positions: DISTINCT over k hash rows x
     members — ONE map-side-combinable distinct agg whose output is

@@ -614,7 +614,8 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("ngram_jaccard_salted", oracle=_NGRAM_JACCARD_ORACLE)
 def q_ngram_jaccard_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT 3-gram Jaccard with hot-shingle skew defused by SALTING
-    instead of dropping (operators/dedup.ngram_jaccard_pairs_salted):
+    instead of dropping (operators/dedup.ngram_jaccard_pairs with
+    max_df=None; the salted join is the hot_df branch of posting_pairs):
     shingles with document frequency > hot_df join on (shingle, salt) —
     left side one salt, right side replicated — so the worst
     per-reduce-key fan-out is d²/n_salts instead of d², while every
@@ -625,8 +626,8 @@ def q_ngram_jaccard_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     path live at every corpus scale with bounded replication — a fixed
     constant either never fires on a sparse corpus or drowns a dense
     one."""
-    return D.ngram_jaccard_pairs_salted(
-        load_table(spark, sf_dir, "documents"), threshold=0.1, n_salts=8
+    return D.ngram_jaccard_pairs(
+        load_table(spark, sf_dir, "documents"), threshold=0.1, max_df=None, n_salts=8
     )
 
 

@@ -318,26 +318,3 @@ def stream_ingest_exact(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def stream_ingest_bloom(
-    stream_df: DataFrame,
-    state_dir: str,
-    query_name: str,
-    checkpoint_location: str,
-    **ingest_kwargs,
-) -> StreamingQuery:
-    """Bloom-filter twin of :func:`stream_ingest_exact` (space-optimized
-    state; m_bits/k pin into the state's _meta on first ingest)."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            make_bloom_ingestor(
-                state_dir, checkpoint_location=checkpoint_location, **ingest_kwargs
-            )
-        )
-        .option("checkpointLocation", checkpoint_location)
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )

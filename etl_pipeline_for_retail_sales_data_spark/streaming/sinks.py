@@ -347,28 +347,3 @@ def make_drift_gated_committer(
             )
 
     return commit_epoch
-
-
-def exactly_once_drift_gated_append(
-    stream_df: DataFrame,
-    table_dir: str,
-    query_name: str,
-    category_col: str,
-    quarantine_dir: str,
-    threshold: float = 0.2,
-    max_unmatched: float = 0.1,
-) -> StreamingQuery:
-    """Start a streaming query appending micro-batches through the PSI
-    drift gate: in-distribution batches land in ``table_dir``, drifted
-    batches in ``quarantine_dir`` (both versioned, epoch-exactly-once)."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            make_drift_gated_committer(
-                table_dir, category_col, quarantine_dir, threshold, max_unmatched
-            )
-        )
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -410,10 +410,10 @@ def test_knn_query_cap_raises(spark, sf_smoke):
 
 
 def test_salted_jaccard_equals_uncapped_exact(spark):
-    """The salted skew variant is EXACT: identical pairs and jaccard
-    values to ngram_jaccard_pairs(max_df=None), with hot_df low enough
-    that the salted path actually runs (the shared stop-phrase prefix is
-    hot for every doc)."""
+    """The salted skew path is EXACT: identical pairs and jaccard values
+    to ngram_jaccard_pairs(max_df=None) at the default p99 hot_df, with
+    hot_df low enough that the salted path actually runs (the shared
+    stop-phrase prefix is hot for every doc)."""
     stop = "the quick brown fox jumps over the lazy dog again and again "
     docs = _docs(
         spark,
@@ -427,18 +427,17 @@ def test_salted_jaccard_equals_uncapped_exact(spark):
     }
     salted = {
         (r.doc_a, r.doc_b): (r.n_inter, r.n_a, r.n_b, r.jaccard)
-        for r in D.ngram_jaccard_pairs_salted(
-            docs, threshold=0.0, hot_df=3, n_salts=4
+        for r in D.ngram_jaccard_pairs(
+            docs, threshold=0.0, max_df=None, hot_df=3, n_salts=4
         ).collect()
     }
     assert salted == exact and len(exact) > 0
 
 
 def test_exact_form_forwards_salt_kwargs(spark):
-    """ADVICE r10: ngram_jaccard_pairs(max_df=None) must pass
-    hot_df/n_salts through to the salted twin — an integer hot_df both
-    keeps plan construction fully lazy (no p99 probe job) and produces
-    the same exact output."""
+    """ngram_jaccard_pairs(max_df=None) passes hot_df/n_salts through to
+    the salted join: an integer hot_df both keeps plan construction
+    fully lazy (no p99 probe job) and produces the same exact output."""
     stop = "the quick brown fox jumps over the lazy dog again and again "
     docs = _docs(
         spark,

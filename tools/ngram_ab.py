@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """A/B for the r9-verdict-#6 promotion: ngram_jaccard_pairs(max_df=None)
-— the EXACT form — now routes through the salted twin, so every default
+— the EXACT form — now takes the salted hot-key join, so every default
 path of the operator is skew-safe. This measures what that promotion
 costs at sf0.1 against the plain (skew-exposed) inverted-index shape and
 against the capped default, and writes the table into SCALING.md between
@@ -45,8 +45,8 @@ def main() -> None:
             docs, threshold=0.1, max_df=None
         ),
         # the pre-promotion plain shape: hot_df no df reaches = all cold
-        "exact_plain (hot_df=huge)": lambda: D.ngram_jaccard_pairs_salted(
-            docs, threshold=0.1, hot_df=1 << 40
+        "exact_plain (hot_df=huge)": lambda: D.ngram_jaccard_pairs(
+            docs, threshold=0.1, max_df=None, hot_df=1 << 40
         ),
         # the capped recall/cost lever (direct-caller default)
         "capped (max_df=256)": lambda: D.ngram_jaccard_pairs(
@@ -72,7 +72,7 @@ def main() -> None:
         "",
         f"sf0.1 documents, threshold=0.1, min of {REPS} (`tools/ngram_ab.py`).",
         "r9 verdict #6: the EXACT form (`max_df=None`) now routes through",
-        "the salted twin — identical output (same oracle), but a hot",
+        "the salted hot-key join — identical output (same oracle), but a hot",
         "stop-phrase shingle's d² pair fan-out spreads over n_salts reduce",
         "keys instead of pinning ONE reducer. The delta below is the",
         "price (the p99 document-frequency probe + hot-side replication);",
