@@ -5,17 +5,17 @@ Session-lifetime cache leaks are a 100-TB-scale killer: an operator that
 executor storage pool into an LRU-thrash zone as a long-lived session
 runs query after query.  This module is the repo-wide discipline:
 
-- :func:`scoped_cache` — a ``with`` block that persists frames for the
-  duration of a computation that consumes them MORE THAN ONCE *inside
-  the operator* (iterative loops, threshold probes) and guarantees the
-  release on exit, exception or not.
+- :func:`scoped_cache` — the ONE owner of every storage-pool block an
+  operator creates. A ``with`` block that persists frames and takes
+  local checkpoints for a computation that consumes them MORE THAN ONCE
+  *inside the operator* (iterative loops, threshold probes), and
+  releases everything it still holds on exit, exception or not.
 
 - :func:`finalize_iterative` — the end-of-loop materialization for
-  iterative operators (PageRank, label propagation, k-means, BPE, MMR).
-  A final ``localCheckpoint(eager=True)`` would pin the result's blocks
-  in the storage pool for the rest of the session (an unmaterialized /
-  unpersisted local checkpoint cannot recompute across its truncated
-  lineage, so nobody may ever release it).  Instead the final state is
+  iterative operators (PageRank, label propagation, k-means, BPE, MMR)
+  and for frames several branches of one plan read. A final
+  ``localCheckpoint(eager=True)`` would pin the result's blocks in the
+  storage pool for the rest of the session. Instead the final state is
   written to a RELIABLE checkpoint (disk files): ``getPersistentRDDs``
   stays empty, the returned frame re-reads the files on demand, and the
   files live outside the executor storage pool entirely — exactly what
@@ -23,8 +23,8 @@ runs query after query.  This module is the repo-wide discipline:
 
 - Reuse-not-cache: operators whose expensive frame feeds several plan
   branches at COLLECT time (inverted-index self-joins, banded LSH) do
-  not persist at all anymore — they ``repartition(key)`` once and let
-  every branch inherit the partitioning; Catalyst's ReuseExchange then
+  not persist at all — they ``repartition(key)`` once and let every
+  branch inherit the partitioning; Catalyst's ReuseExchange then
   materializes the expensive stage ONCE in shuffle files (auto-cleaned,
   no storage-pool pressure).  See ``operators/dedup.py``.
 
@@ -35,8 +35,10 @@ registry query runs to completion, ``getPersistentRDDs()`` is empty.
 from __future__ import annotations
 
 import tempfile
+import warnings
 from contextlib import contextmanager
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -58,102 +60,100 @@ def ensure_checkpoint_dir(spark: SparkSession) -> str:
 
 
 def finalize_iterative(df: DataFrame) -> DataFrame:
-    """Materialize the final state of an iterative operator WITHOUT
-    leaving persisted blocks behind: reliable (disk) checkpoint, eager.
-
-    The caller must keep its intermediate (local) checkpoints alive
-    until this returns — the final round's plan reads them exactly once
-    more during the checkpoint write — then release them all.
-    """
-    ensure_checkpoint_dir(df.sparkSession)
-    return df.checkpoint(eager=True)
-
-
-def shared_frame(df: DataFrame) -> DataFrame:
-    """Materialize a frame that MULTIPLE branches of one returned plan
-    consume — eager RELIABLE checkpoint, zero persisted blocks.
-
-    When to use it (r12, guide §2.4/§5 — and when NOT to): AQE stage
-    reuse already deduplicates plan branches whose canonicalized
-    exchanges match (identically-pruned self-join sides — accumulator-
-    verified in r12, correcting r11's initial-plan reading), so
-    checkpointing those is pure write+read overhead (measured
-    regressions, plans/r12/ab_shared_frame.json). Reach for this ONLY
-    when a recompute is real: (a) a construction-time PROBE is a
-    separate execution and cannot share stages with the main collect
-    (the salted-ngram p99 path — A/B 1.5×), or (b) consumer branches
-    prune to different column sets and their exchanges cannot
-    canonicalize equal. Storage pool untouched (``getPersistentRDDs``
-    stays empty — the cache-hygiene contract); files live in the
-    checkpoint dir (HDFS/S3 on a cluster) and are reclaimed by the
+    """Materialize ``df`` WITHOUT leaving persisted blocks behind:
+    reliable (disk) checkpoint, eager. The files are reclaimed by the
     ContextCleaner when the frame is GC'd
     (``spark.cleaner.referenceTracking.cleanCheckpoints=true``,
-    session.py). The partitioning survives (LogicalRDD carries the
-    physical outputPartitioning), so a join keyed like the checkpointed
-    repartition still plans exchange-free.
+    session.py), and the partitioning survives, so a join keyed like a
+    checkpointed repartition still plans exchange-free.
 
-    The trade at 100 TB: ONE frame-sized sequential write (+ per-consumer
-    reads) replaces k corpus map passes + k redundant shuffle writes —
-    a win for k >= 2 whenever the map stage is more expensive than the
-    frame's serialized bytes (every Arrow/md5/fft stage in this repo;
-    measured per caller, numbers in OPTIMIZATION_r12.md)."""
+    For a frame that several branches of one plan read, checkpoint only
+    when a recompute is real: a construction-time probe is a separate
+    execution and cannot share stages with the returned plan, or the
+    branches prune to different column sets. AQE stage reuse already
+    reads identically-pruned branches from one exchange, so
+    checkpointing those is pure write+read overhead."""
     ensure_checkpoint_dir(df.sparkSession)
     return df.checkpoint(eager=True)
 
 
-def local_ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``localCheckpoint`` with RELEASABLE blocks.
+class CacheScope:
+    """The frames and local checkpoints one :func:`scoped_cache` block
+    holds; each is released once, by :meth:`release` or at block exit.
 
-    ``Dataset.unpersist()`` is a silent no-op for checkpoint blocks —
-    they live on the internal RDD, not in the CacheManager — so a plain
-    ``df.localCheckpoint()`` can only be reclaimed by the ContextCleaner
-    after the frame is garbage collected (non-deterministic, and never
-    while a driver loop still references the round list). This wrapper
-    records the persistent-RDD ids the checkpoint registers (persist()
-    marks the RDD immediately, even for lazy checkpoints) so
-    :func:`release_ckpt` can free the blocks deterministically.
+    Conditions callers rely on:
+
+    - ``Dataset.unpersist()`` is a silent no-op for checkpoint blocks
+      (they live on the internal RDD, not in the CacheManager), so
+      :meth:`local_ckpt` records the persistent-RDD ids the checkpoint
+      registers — persist marks the RDD at once, even for a lazy
+      checkpoint — and releasing frees exactly those.
+    - An unmaterialized lazy checkpoint cannot recompute across its
+      truncated lineage: release a checkpoint only after an action has
+      run over every plan that reads it.
+    - Nothing the block holds outlives it: a returned frame that reads
+      a local checkpoint must be finalized (:func:`finalize_iterative`)
+      before the block exits; one that reads only persisted frames
+      recomputes them.
     """
-    sc = df.sparkSession.sparkContext
-    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-    out = df.localCheckpoint(eager=eager)
-    after = sc._jsc.getPersistentRDDs().keySet().toArray()
-    out._ckpt_rdd_ids = [k for k in after if k not in before]
-    return out
+
+    def __init__(self) -> None:
+        self._held: list[tuple[DataFrame, list[int] | None]] = []
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        self._held.append((df.persist(), None))
+        return df
+
+    def local_ckpt(self, df: DataFrame, eager: bool) -> DataFrame:
+        persistent = df.sparkSession.sparkContext._jsc.getPersistentRDDs
+        before = set(persistent().keySet().toArray())
+        out = df.localCheckpoint(eager=eager)
+        self._held.append((out, [k for k in persistent().keySet().toArray() if k not in before]))
+        return out
+
+    def release(self, df: DataFrame | None) -> None:
+        """Free ``df``'s blocks now; a no-op for a frame the scope does
+        not (or no longer) hold."""
+        for i, (held, _) in enumerate(self._held):
+            if held is df:
+                _free(*self._held.pop(i))
+                return
+
+    def _close(self) -> None:
+        # release everything even if one release fails (e.g. the JVM is
+        # gone), and never mask the exception that ended the block
+        while self._held:
+            try:
+                _free(*self._held.pop())
+            except Py4JError as e:
+                warnings.warn(f"scoped_cache could not release a frame: {e}", RuntimeWarning)
 
 
-def release_ckpt(df: DataFrame) -> None:
-    """Free the blocks of a frame produced by :func:`local_ckpt`.
-
-    Only call once every consumer of the frame has materialized — a
-    local checkpoint cannot recompute across its truncated lineage.
-    No-op for frames without recorded checkpoint ids.
-    """
-    ids = getattr(df, "_ckpt_rdd_ids", None)
-    if not ids:
+def _free(df: DataFrame, ckpt_ids: list[int] | None) -> None:
+    if ckpt_ids is None:
+        df.unpersist()
         return
     jmap = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
-    for rid in ids:
+    for rid in ckpt_ids:
         if jmap.containsKey(rid):
             jmap.get(rid).unpersist(False)
-    df._ckpt_rdd_ids = []
 
 
 @contextmanager
 def scoped_cache(*frames: DataFrame):
-    """Persist ``frames`` inside the block, guaranteed release on exit.
+    """Persist ``frames`` inside the block and yield its
+    :class:`CacheScope`; everything the scope still holds is released
+    on exit, exception or not.
 
     For operator-INTERNAL reuse only (driver-side probes, loop bodies).
     Frames consumed by the operator's *returned* plan must not rely on
     this cache — after exit they recompute; use reuse-not-cache shapes
     (repartition + ReuseExchange) for collect-time sharing instead.
     """
-    for f in frames:
-        f.persist()
+    scope = CacheScope()
     try:
-        yield frames[0] if len(frames) == 1 else frames
-    finally:
         for f in frames:
-            try:
-                f.unpersist()
-            except Exception:
-                pass
+            scope.persist(f)
+        yield scope
+    finally:
+        scope._close()

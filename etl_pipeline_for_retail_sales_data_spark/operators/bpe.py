@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cachectl import local_ckpt, release_ckpt
+from ..cachectl import scoped_cache
 from ..functions import spread
 
 END = "</w>"
@@ -230,14 +230,12 @@ def bpe_train(
     — same merge sequence either way (pinned equal in tests). 2M rows
     ≈ 100 MB driver memory; tune the cap to the driver's heap on a
     cluster, or pass None/0 to force the distributed path."""
-    # NO spread() here (r12): word_freq output is already spread across
-    # the aggregate's shuffle partitions, and spread's partition probe
+    # NO spread() here: word_freq output is already spread across the
+    # aggregate's shuffle partitions, and spread's partition probe
     # (`df.rdd.getNumPartitions()`) on a post-shuffle AQE frame
     # MATERIALIZES the whole upstream plan as its own job — the word
-    # count ran twice (once for the probe, once for the collect), which
-    # is where bpe_top_merges' anti-scaling came from (the probe's cost
-    # grows with shuffle-partition count; r11 scaling block: 8 cores 3×
-    # faster than 32).
+    # count would run twice, at a cost that grows with the
+    # shuffle-partition count.
     wf = word_freq(docs, text_col)
     if driver_vocab_cap:
         head = wf.limit(driver_vocab_cap + 1).collect()
@@ -247,33 +245,28 @@ def bpe_train(
                 return merges
             return [(a, b) for a, b, _ in merges]
         del head  # vocabulary exceeds the cap: distributed loop below
-    symframe = local_ckpt(_init_symbols(wf), eager=True)
     merges: list[tuple[str, str, int]] = []
-    prev: DataFrame | None = None
-    for _ in range(n_merges):
-        # ONE job per round: the argmax collect also materializes the
-        # previous round's LAZY checkpoint (eager would be a second job
-        # per round — measured 2x the training wall time). The parent
-        # frame is released only after this collect, because the lazy
-        # checkpoint cannot recompute across its truncated lineage.
-        best = (
-            _pair_counts(symframe)
-            .orderBy(F.col("cnt").desc(), F.col("a").asc(), F.col("b").asc())
-            .limit(1)
-            .collect()
-        )
-        if prev is not None:
-            release_ckpt(prev)
-            prev = None
-        if not best or best[0]["cnt"] < min_freq:
-            break
-        a, b = best[0]["a"], best[0]["b"]
-        merges.append((a, b, int(best[0]["cnt"])))
-        prev = symframe
-        symframe = local_ckpt(_apply_merge(symframe, a, b), eager=False)
-    release_ckpt(symframe)
-    if prev is not None:
-        release_ckpt(prev)
+    with scoped_cache() as scope:
+        symframe = scope.local_ckpt(_init_symbols(wf), eager=True)
+        prev: DataFrame | None = None
+        for _ in range(n_merges):
+            # ONE job per round: the argmax collect also materializes the
+            # previous round's LAZY checkpoint (eager would be a second
+            # job per round — measured 2x the training wall time), so the
+            # parent frame is released only after this collect
+            best = (
+                _pair_counts(symframe)
+                .orderBy(F.col("cnt").desc(), F.col("a").asc(), F.col("b").asc())
+                .limit(1)
+                .collect()
+            )
+            scope.release(prev)
+            if not best or best[0]["cnt"] < min_freq:
+                break
+            a, b = best[0]["a"], best[0]["b"]
+            merges.append((a, b, int(best[0]["cnt"])))
+            prev = symframe
+            symframe = scope.local_ckpt(_apply_merge(symframe, a, b), eager=False)
     if return_counts:
         return merges
     return [(a, b) for a, b, _ in merges]

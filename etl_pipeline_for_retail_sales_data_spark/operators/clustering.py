@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..cachectl import finalize_iterative, local_ckpt, release_ckpt
+from ..cachectl import finalize_iterative, scoped_cache
 from ..functions import spread
 from .similarity import as_double
 
@@ -81,39 +81,36 @@ def kmeans_assign(
     point.
 
     ``keep_vec=True`` additionally carries the (as_double) vector
-    through the final checkpoint as column ``v`` (r12): the rounds
+    through the final checkpoint as column ``v``: the rounds
     already carry it — only the final select dropped it — and a caller
     that needs vectors next to the assignment (semantic_dedup's unit
     vectors) otherwise re-scans the embedding table and pays a
     sort-merge join back onto ``vec_id``, once per differently-pruned
     plan branch."""
-    pts = spread(emb).select(
-        F.col(id_col).alias("vec_id"), as_double(F.col(vec_col)).alias("v")
-    ).persist()
-    # seeds: k lowest ids via orderBy().limit(k) — plans
-    # TakeOrderedAndProject (per-partition top-k, merge on driver), NOT a
-    # global single-partition sort of the whole corpus. The k-row window
-    # that assigns cluster ids is trivially small.
-    seeds = pts.orderBy("vec_id").limit(k)
-    w = Window.orderBy("vec_id")
-    centroids = seeds.withColumn("__rn", F.row_number().over(w)).select(
-        (F.col("__rn") - 1).alias("cluster"), F.col("v").alias("centroid")
-    )
-    rounds = []
-    assigned = None
-    for it in range(iters):
-        assigned = local_ckpt(_assign(pts, centroids), eager=(it == iters - 1))
-        rounds.append(assigned)
-        if it < iters - 1:
-            centroids = _recompute_centroids(assigned)
-    # final assignment to a RELIABLE checkpoint so every local checkpoint
-    # releases here — no session-lifetime blocks (cachectl.py)
-    cols = ["vec_id", "cluster", "dist"] + (["v"] if keep_vec else [])
-    out = finalize_iterative(assigned.select(*cols))
-    pts.unpersist()
-    for frame in rounds:
-        release_ckpt(frame)
-    return out
+    with scoped_cache() as scope:
+        pts = scope.persist(
+            spread(emb).select(
+                F.col(id_col).alias("vec_id"), as_double(F.col(vec_col)).alias("v")
+            )
+        )
+        # seeds: k lowest ids via orderBy().limit(k) — plans
+        # TakeOrderedAndProject (per-partition top-k, merge on driver),
+        # NOT a global single-partition sort of the whole corpus. The
+        # k-row window that assigns cluster ids is trivially small.
+        seeds = pts.orderBy("vec_id").limit(k)
+        w = Window.orderBy("vec_id")
+        centroids = seeds.withColumn("__rn", F.row_number().over(w)).select(
+            (F.col("__rn") - 1).alias("cluster"), F.col("v").alias("centroid")
+        )
+        assigned = None
+        for it in range(iters):
+            assigned = scope.local_ckpt(_assign(pts, centroids), eager=(it == iters - 1))
+            if it < iters - 1:
+                centroids = _recompute_centroids(assigned)
+        # final assignment to a RELIABLE checkpoint so the scope can
+        # release every local checkpoint — no session-lifetime blocks
+        cols = ["vec_id", "cluster", "dist"] + (["v"] if keep_vec else [])
+        return finalize_iterative(assigned.select(*cols))
 
 
 def kmeans_inertia(assigned: DataFrame) -> float:
@@ -133,8 +130,8 @@ def split_oversized_clusters(
 ) -> DataFrame:
     """Recursively split clusters above ``max_cluster_size`` so a single
     hot k-means cluster cannot re-inflate SemDeDup's within-cluster pair
-    join toward n² (r7 verdict: Σ|cluster|² must stay bounded by the
-    cap, not by luck).
+    join toward n² (Σ|cluster|² must stay bounded by the cap, not by
+    luck).
 
     Input/output: (vec_id, cluster, uv) — cluster labels come out as
     STRINGS ("3", "3.1", "3.1#2", …) since each split level appends a
@@ -152,7 +149,7 @@ def split_oversized_clusters(
     up to one keeper per final sub-cluster — the standard SemDeDup
     recall/cost dial (cluster granularity), applied adaptively instead
     of globally via k. Each level materializes via local checkpoint; the
-    CALLER must finalize/release (semantic_dedup does).
+    result is finalized to a reliable checkpoint.
     """
     from .similarity import dot
 
@@ -167,77 +164,76 @@ def split_oversized_clusters(
         pts.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
     cur = pts.select("vec_id", F.col("cluster").cast("string").alias("cluster"), "uv")
-    rounds: list[DataFrame] = []
     prev_max = None
     use_hash = False
-    for _ in range(max_levels):
-        sizes = cur.groupBy("cluster").agg(F.count("*").alias("__n"))
-        stat = (
-            sizes.filter(F.col("__n") > max_cluster_size)
-            .agg(F.count("*").alias("c"), F.max("__n").alias("m"))
-            .collect()[0]
-        )
-        if not stat["c"]:
-            break
-        if prev_max is not None and stat["m"] >= prev_max:
-            use_hash = True  # seed split stalled (ties) — hash always splits
-        prev_max = stat["m"]
-        over = F.broadcast(
-            sizes.filter(F.col("__n") > max_cluster_size).select("cluster")
-        )
-        small = cur.join(over, "cluster", "left_anti")
-        big = cur.join(over, "cluster", "left_semi")
-        if use_hash:
-            # the label participates in the hash so each level's re-split
-            # of a still-oversized cluster lands points DIFFERENTLY —
-            # hashing vec_id alone would re-produce the same sub-label
-            # every level and never make progress past the first split
-            newbig = big.select(
-                "vec_id",
-                F.concat(
-                    "cluster",
-                    F.lit("#"),
-                    F.pmod(F.xxhash64("cluster", "vec_id"), F.lit(S)).cast("string"),
-                ).alias("cluster"),
-                "uv",
+    with scoped_cache() as scope:
+        for _ in range(max_levels):
+            sizes = cur.groupBy("cluster").agg(F.count("*").alias("__n"))
+            stat = (
+                sizes.filter(F.col("__n") > max_cluster_size)
+                .agg(F.count("*").alias("c"), F.max("__n").alias("m"))
+                .collect()[0]
             )
-        else:
-            w = Window.partitionBy("cluster").orderBy("vec_id")
-            seed_ids = (
-                big.select("cluster", "vec_id")
-                .withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") <= S)
+            if not stat["c"]:
+                break
+            if prev_max is not None and stat["m"] >= prev_max:
+                use_hash = True  # seed split stalled (ties) — hash always splits
+            prev_max = stat["m"]
+            over = F.broadcast(
+                sizes.filter(F.col("__n") > max_cluster_size).select("cluster")
             )
-            seeds = seed_ids.join(big, ["cluster", "vec_id"]).select(
-                "cluster",
-                (F.col("__rn") - 1).alias("__sub"),
-                F.col("uv").alias("__seed"),
-            )
-            best = (
-                big.join(seeds, "cluster")
-                .select(
-                    "cluster",
+            small = cur.join(over, "cluster", "left_anti")
+            big = cur.join(over, "cluster", "left_semi")
+            if use_hash:
+                # the label participates in the hash so each level's re-split
+                # of a still-oversized cluster lands points DIFFERENTLY —
+                # hashing vec_id alone would re-produce the same sub-label
+                # every level and never make progress past the first split
+                newbig = big.select(
                     "vec_id",
-                    F.struct(
-                        (-dot(F.col("uv"), F.col("__seed"))).alias("ns"),
-                        F.col("__sub").alias("sub"),
-                    ).alias("__sc"),
+                    F.concat(
+                        "cluster",
+                        F.lit("#"),
+                        F.pmod(F.xxhash64("cluster", "vec_id"), F.lit(S)).cast("string"),
+                    ).alias("cluster"),
+                    "uv",
                 )
-                .groupBy("cluster", "vec_id")
-                .agg(F.min("__sc").alias("__b"))
+            else:
+                w = Window.partitionBy("cluster").orderBy("vec_id")
+                seed_ids = (
+                    big.select("cluster", "vec_id")
+                    .withColumn("__rn", F.row_number().over(w))
+                    .filter(F.col("__rn") <= S)
+                )
+                seeds = seed_ids.join(big, ["cluster", "vec_id"]).select(
+                    "cluster",
+                    (F.col("__rn") - 1).alias("__sub"),
+                    F.col("uv").alias("__seed"),
+                )
+                best = (
+                    big.join(seeds, "cluster")
+                    .select(
+                        "cluster",
+                        "vec_id",
+                        F.struct(
+                            (-dot(F.col("uv"), F.col("__seed"))).alias("ns"),
+                            F.col("__sub").alias("sub"),
+                        ).alias("__sc"),
+                    )
+                    .groupBy("cluster", "vec_id")
+                    .agg(F.min("__sc").alias("__b"))
+                )
+                newbig = big.join(best, ["cluster", "vec_id"]).select(
+                    "vec_id",
+                    F.concat(
+                        "cluster", F.lit("."), F.col("__b.sub").cast("string")
+                    ).alias("cluster"),
+                    "uv",
+                )
+            cur = scope.local_ckpt(
+                small.unionByName(newbig).coalesce(n_part), eager=True
             )
-            newbig = big.join(best, ["cluster", "vec_id"]).select(
-                "vec_id",
-                F.concat(
-                    "cluster", F.lit("."), F.col("__b.sub").cast("string")
-                ).alias("cluster"),
-                "uv",
-            )
-        cur = local_ckpt(small.unionByName(newbig).coalesce(n_part), eager=True)
-        rounds.append(cur)
-    # hand the round frames to the caller's finalize/release cycle
-    cur._split_rounds = rounds  # type: ignore[attr-defined]
-    return cur
+        return finalize_iterative(cur)
 
 
 def assign_to_centroids(
@@ -301,10 +297,10 @@ def semantic_dedup(
     otherwise re-inflate Σ|cluster|² toward n², so clusters above the
     cap are recursively split (:func:`split_oversized_clusters`) before
     the pair join. The DEFAULT is ``"auto"`` = ``split_factor`` ×
-    ⌈n/k⌉ — four times the average cluster size (r8 verdict #5: the cap
-    is on by default so every end-to-end composition is protected; at
-    100 TB one hot cluster is the realistic failure, and an uncapped
-    default quietly plans it). The cap only ENGAGES when some cluster
+    ⌈n/k⌉ — four times the average cluster size (on by default so every
+    end-to-end composition is protected: at 100 TB one hot cluster is
+    the realistic failure, and an uncapped default quietly plans it).
+    The cap only ENGAGES when some cluster
     actually exceeds it (one cheap size aggregate decides): a non-binding
     cap — every corpus whose k-means spread is sane, including all the
     oracle-checked testdata runs — leaves the output byte-identical to
@@ -330,16 +326,11 @@ def semantic_dedup(
     from .dedup import connected_components
     from .similarity import dot
 
-    # r12: the assignment checkpoint carries the vector (keep_vec), so
-    # unit vectors are a map expression over the checkpoint files — the
-    # former unit_vectors(emb) leg re-scanned the embedding table and
-    # sort-merge-joined it back onto vec_id, and because the four
-    # downstream consumers prune base differently, that join lineage
-    # recomputed per branch. Expression identical to
-    # similarity.unit_vectors (same as_double input, norm projection,
-    # per-element divide), and the isNotNull filter reproduces the
-    # inner join's drop of null-embedding rows — outputs unchanged
-    # (oracle + property tests green).
+    # the assignment checkpoint carries the vector (keep_vec), so unit
+    # vectors are a map expression over the checkpoint files. Expression
+    # identical to similarity.unit_vectors (same as_double input, norm
+    # projection, per-element divide); the isNotNull filter drops
+    # null-embedding rows as a join back onto the embeddings would.
     assigned = kmeans_assign(
         emb, k=k, iters=iters, id_col=id_col, vec_col=vec_col, keep_vec=True
     )
@@ -372,13 +363,7 @@ def semantic_dedup(
             else int(max_cluster_size)
         )
         if int(stat["__max"]) > cap:
-            capped = split_oversized_clusters(base, cap, split_factor)
-            rounds = getattr(capped, "_split_rounds", [])
-            # reliable checkpoint, then release the split rounds' blocks —
-            # the same finalize/release cycle as kmeans_assign (cachectl.py)
-            base = finalize_iterative(capped.select("vec_id", "cluster", "uv"))
-            for fr in rounds:
-                release_ckpt(fr)
+            base = split_oversized_clusters(base, cap, split_factor)
     # reuse-not-cache (cachectl.py): the assignment (file-backed after
     # kmeans_assign's reliable checkpoint) joins unit vectors once into a
     # cluster-partitioned exchange that the aliased self-join sides, the

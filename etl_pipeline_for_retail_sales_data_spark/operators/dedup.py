@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cachectl import finalize_iterative, local_ckpt, release_ckpt, shared_frame
+from ..cachectl import finalize_iterative, scoped_cache
 from ..functions import spread
 from .text import TOKEN_RE
 
@@ -229,8 +229,8 @@ def posting_pairs(
     moves where the shuffle work lands. ``hot_df="p99"`` makes it
     adaptive (keys above the 99th percentile of document frequency go
     hot) at the cost of one bounded eager job at construction: the
-    frame is ``shared_frame``-checkpointed so the percentile probe and
-    the returned plan read one materialization. An integer keeps
+    frame is checkpointed (``finalize_iterative``) so the percentile
+    probe and the returned plan read one materialization. An integer keeps
     construction fully lazy."""
     from pyspark.sql import Window
 
@@ -251,7 +251,7 @@ def posting_pairs(
     if max_df is not None:
         sh = sh.filter(F.col("__df") <= max_df)
     if hot_df == "p99":
-        sh = shared_frame(sh)
+        sh = finalize_iterative(sh)
         # exact percentile over the (small) per-key df frame; one scalar
         # to the driver. No postings → no keys → 0 threshold.
         dfreq = sh.groupBy(key).agg(F.first("__df").alias("__df"))
@@ -566,65 +566,61 @@ def connected_components(
     reads the fixpoint signal — no separate old-vs-new join job (which
     previously doubled the per-round job count).
     """
-    sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).unionAll(
-        edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-    )
-    sym = local_ckpt(sym, eager=True)
-    # iterate ONLY over edge-incident nodes: a node with no edges is its
-    # own singleton component, can never change label, and contributes
-    # nothing to any neighbor — so it is appended analytically after the
-    # fixpoint instead of riding through every round. Near-dup graphs
-    # are sparse; at corpus scale this iterates over the candidate-pair
-    # members (sym's endpoints), not the whole corpus.
-    all_nodes = nodes.select(F.col(id_col).alias("node"))
-    incident = all_nodes.join(
-        sym.select(F.col("u").alias("node")), "node", "left_semi"
-    )
-    singletons = all_nodes.join(
-        sym.select(F.col("u").alias("node")), "node", "left_anti"
-    )
-    labels = incident.select("node", F.col("node").alias("comp"))
-    labels = local_ckpt(labels, eager=True)
-    for _ in range(max_iter):
-        nb_min = (
-            labels.join(sym, labels["node"] == sym["u"])
-            .groupBy("v")
-            .agg(F.min("comp").alias("nb_comp"))
+    with scoped_cache() as scope:
+        sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).unionAll(
+            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
         )
-        new_comp = F.least(F.col("comp"), F.coalesce(F.col("nb_comp"), F.col("comp")))
-        new_labels = (
-            labels.join(nb_min, labels["node"] == nb_min["v"], "left")
-            .select(
-                "node",
-                new_comp.alias("comp"),
-                # min-label only ever shrinks, so != is exactly "shrank"
-                (new_comp != F.col("comp")).alias("chg"),
+        sym = scope.local_ckpt(sym, eager=True)
+        # iterate ONLY over edge-incident nodes: a node with no edges is
+        # its own singleton component, can never change label, and
+        # contributes nothing to any neighbor — so it is appended
+        # analytically after the fixpoint instead of riding through every
+        # round. Near-dup graphs are sparse; at corpus scale this iterates
+        # over the candidate-pair members (sym's endpoints), not the
+        # whole corpus.
+        all_nodes = nodes.select(F.col(id_col).alias("node"))
+        incident = all_nodes.join(
+            sym.select(F.col("u").alias("node")), "node", "left_semi"
+        )
+        singletons = all_nodes.join(
+            sym.select(F.col("u").alias("node")), "node", "left_anti"
+        )
+        labels = incident.select("node", F.col("node").alias("comp"))
+        labels = scope.local_ckpt(labels, eager=True)
+        for _ in range(max_iter):
+            nb_min = (
+                labels.join(sym, labels["node"] == sym["u"])
+                .groupBy("v")
+                .agg(F.min("comp").alias("nb_comp"))
+            )
+            new_comp = F.least(F.col("comp"), F.coalesce(F.col("nb_comp"), F.col("comp")))
+            new_labels = (
+                labels.join(nb_min, labels["node"] == nb_min["v"], "left")
+                .select(
+                    "node",
+                    new_comp.alias("comp"),
+                    # min-label only ever shrinks, so != is exactly "shrank"
+                    (new_comp != F.col("comp")).alias("chg"),
+                )
+            )
+            new_labels = scope.local_ckpt(new_labels, eager=False)
+            # this count scans every partition of the lazy checkpoint, so
+            # it materializes the round AND reads convergence in one job;
+            # only after it returns may the parent frame be released
+            changed = new_labels.filter("chg").count()
+            scope.release(labels)
+            labels = new_labels
+            if changed == 0:
+                break
+        out = labels.select(F.col("node").alias(id_col), F.col("comp").alias("component_id"))
+        out = out.unionAll(
+            singletons.select(
+                F.col("node").alias(id_col), F.col("node").alias("component_id")
             )
         )
-        new_labels = local_ckpt(new_labels, eager=False)
-        # this count scans every partition of the lazy checkpoint, so it
-        # materializes the round AND reads convergence in one job; only
-        # after it returns is the parent frame safe to release (an
-        # unmaterialized checkpoint cannot recompute across its
-        # truncated lineage)
-        changed = new_labels.filter("chg").count()
-        release_ckpt(labels)
-        labels = new_labels
-        if changed == 0:
-            break
-    out = labels.select(F.col("node").alias(id_col), F.col("comp").alias("component_id"))
-    out = out.unionAll(
-        singletons.select(
-            F.col("node").alias(id_col), F.col("node").alias("component_id")
-        )
-    )
-    # materialize the fixpoint to a RELIABLE checkpoint (disk files, no
-    # storage-pool blocks), then release every local checkpoint — the
-    # session ends the query with getPersistentRDDs() empty (cachectl.py)
-    out = finalize_iterative(out)
-    release_ckpt(labels)
-    release_ckpt(sym)
-    return out
+        # the fixpoint goes to a RELIABLE checkpoint (disk files, no
+        # storage-pool blocks) before the scope releases its checkpoints
+        return finalize_iterative(out)
 
 
 def simhash_candidates(

@@ -9,8 +9,8 @@ the canonical document inside a near-dup cluster.
 Execution model: classic synchronous PageRank as a driver loop of
 DataFrame joins — contributions = ranks ⋈ out-degree edges, new ranks =
 groupBy(dst).sum with teleport + dangling-mass redistribution. Each
-iteration is one shuffle on the node key; the loop materializes each
-iteration (persist + count) to keep the lineage flat instead of
+iteration is one shuffle on the node key; each iteration's rank frame
+is a local checkpoint, which keeps the lineage flat instead of
 exponentially nested. At cluster scale the same loop runs unchanged —
 iterations dominate, so pre-partitioning edges and ranks by node id
 (bucketing) removes the per-iteration edge shuffle; the rank frame is
@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cachectl import finalize_iterative, local_ckpt, release_ckpt
+from ..cachectl import finalize_iterative, scoped_cache
 
 
 def pagerank(
@@ -52,94 +52,88 @@ def pagerank(
     edges to known vertices — at corpus scale those are two full
     shuffles of the EDGE table bought purely as input hygiene (guide
     §2.4). Output is identical whenever the guarantee holds."""
-    n = nodes.select(F.col(id_col).alias("id")).distinct().persist()
-    n_nodes = n.count()
-    if n_nodes == 0:
-        # keep the contract schema (id_col, rank) on the empty path too
-        return n.select(F.col("id").alias(id_col), F.lit(0.0).alias("rank"))
+    with scoped_cache() as scope:
+        n = scope.persist(nodes.select(F.col(id_col).alias("id")).distinct())
+        n_nodes = n.count()
+        if n_nodes == 0:
+            # keep the contract schema (id_col, rank) on the empty path too
+            return n.select(F.col("id").alias(id_col), F.lit(0.0).alias("rank"))
 
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if not assume_edges_valid:
-        e = e.join(n.withColumnRenamed("id", "src"), "src").join(
-            n.withColumnRenamed("id", "dst"), "dst"
-        )
-    else:
-        # the fast path skips only the two SEMI-JOIN shuffles; null
-        # endpoints are still dropped map-side (r11 ADVICE: a violated
-        # guarantee should not silently leak rank mass through null
-        # keys — this filter is free, the semi-joins were not)
-        e = e.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    out_deg = e.groupBy("src").agg(F.count("*").alias("deg")).persist()
-    # weighted edges: contribution share of each (src,dst) = multiplicity/deg
-    ew = e.join(out_deg, "src").persist()
-    ew.count()
-
-    # dangling node set (no out-edges) is static across iterations
-    dangling_ids = n.join(out_deg.withColumnRenamed("src", "id"), "id", "left_anti").persist()
-    # one bounded probe: when NOTHING dangles (symmetric near-dup graphs
-    # over edge-incident nodes — the dedup-pipeline caller), the
-    # per-iteration dangling-mass semi-join + broadcast contributes an
-    # exact 0.0 and can be dropped from every round's plan (one fewer
-    # pass over the rank frame per iteration at corpus scale)
-    has_dangling = bool(dangling_ids.limit(1).count())
-
-    ranks = n.withColumn("rank", F.lit(1.0))
-    rounds = [ranks]
-    for it in range(iterations):
-        contribs = (
-            ew.join(ranks.withColumnRenamed("id", "src"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") / F.col("deg")).alias("contrib"))
-            .withColumnRenamed("dst", "id")
-        )
-        # mass sitting on dangling nodes this iteration, as a broadcast
-        # 1-row frame — no driver collect round-trip per iteration.
-        # With an empty dangling set the term is exactly +0.0, so the
-        # whole subtree is elided (x + 0.0 == x for every finite rank).
-        if has_dangling:
-            dang = ranks.join(dangling_ids, "id", "left_semi").agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dang")
-            )
-            base = (
-                F.lit(1.0 - damping)
-                + F.lit(damping) * F.col("__dang") / F.lit(float(n_nodes))
+        e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        if not assume_edges_valid:
+            e = e.join(n.withColumnRenamed("id", "src"), "src").join(
+                n.withColumnRenamed("id", "dst"), "dst"
             )
         else:
-            base = F.lit(1.0 - damping)
-        # localCheckpoint truncates the logical plan each iteration (a
-        # LAZY one truncates immediately too — the plan becomes a
-        # LogicalRDD at once, only the compute is deferred), so Catalyst
-        # never re-analyzes a nested lineage. Lazy rounds chain the whole
-        # fixed-iteration loop into ONE job fired by the final eager
-        # round — iterations-1 fewer job launches. The cost is holding
-        # every round's n-row rank frame until the chain materializes
-        # (an unmaterialized checkpoint cannot recompute across its
-        # truncated lineage); at billion-node scale cap that by going
-        # eager every few rounds and releasing the frames behind the
-        # eager point. On a cluster swap for reliable checkpoint(dir) to
-        # also survive executor loss.
-        ranks = n.join(contribs, "id", "left")
-        if has_dangling:
-            ranks = ranks.crossJoin(F.broadcast(dang))
-        ranks = ranks.select(
-            "id",
-            (base + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))).alias("rank"),
-        )
-        ranks = local_ckpt(ranks, eager=(it == iterations - 1))
-        rounds.append(ranks)
+            # the fast path skips only the two SEMI-JOIN shuffles; null
+            # endpoints are still dropped map-side, so a violated
+            # guarantee cannot leak rank mass through null keys
+            e = e.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        out_deg = scope.persist(e.groupBy("src").agg(F.count("*").alias("deg")))
+        # weighted edges: contribution share of each (src,dst) = multiplicity/deg
+        ew = scope.persist(e.join(out_deg, "src"))
+        ew.count()
 
-    # final ranks go to a RELIABLE checkpoint (disk files, re-readable on
-    # demand) so every local checkpoint and cache can be released here —
-    # the query ends with getPersistentRDDs() empty (cachectl.py); on a
-    # cluster the checkpoint dir is HDFS/S3 and doubles as fault tolerance
-    out = finalize_iterative(ranks.select(F.col("id").alias(id_col), "rank"))
-    ew.unpersist()
-    out_deg.unpersist()
-    dangling_ids.unpersist()
-    n.unpersist()
-    for frame in rounds:
-        release_ckpt(frame)
-    return out
+        # dangling node set (no out-edges) is static across iterations
+        dangling_ids = scope.persist(
+            n.join(out_deg.withColumnRenamed("src", "id"), "id", "left_anti")
+        )
+        # one bounded probe: when NOTHING dangles (symmetric near-dup
+        # graphs over edge-incident nodes — the dedup-pipeline caller),
+        # the per-iteration dangling-mass semi-join + broadcast
+        # contributes an exact 0.0 and can be dropped from every round's
+        # plan (one fewer pass over the rank frame per iteration at
+        # corpus scale)
+        has_dangling = bool(dangling_ids.limit(1).count())
+
+        ranks = n.withColumn("rank", F.lit(1.0))
+        for it in range(iterations):
+            contribs = (
+                ew.join(ranks.withColumnRenamed("id", "src"), "src")
+                .groupBy("dst")
+                .agg(F.sum(F.col("rank") / F.col("deg")).alias("contrib"))
+                .withColumnRenamed("dst", "id")
+            )
+            # mass sitting on dangling nodes this iteration, as a
+            # broadcast 1-row frame — no driver collect round-trip per
+            # iteration. With an empty dangling set the term is exactly
+            # +0.0, so the whole subtree is elided (x + 0.0 == x for
+            # every finite rank).
+            if has_dangling:
+                dang = ranks.join(dangling_ids, "id", "left_semi").agg(
+                    F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dang")
+                )
+                base = (
+                    F.lit(1.0 - damping)
+                    + F.lit(damping) * F.col("__dang") / F.lit(float(n_nodes))
+                )
+            else:
+                base = F.lit(1.0 - damping)
+            # localCheckpoint truncates the logical plan each iteration
+            # (a LAZY one truncates immediately too — the plan becomes a
+            # LogicalRDD at once, only the compute is deferred), so
+            # Catalyst never re-analyzes a nested lineage. Lazy rounds
+            # chain the whole fixed-iteration loop into ONE job fired by
+            # the final eager round — iterations-1 fewer job launches.
+            # The cost is holding every round's n-row rank frame until
+            # the chain materializes; at billion-node scale cap that by
+            # going eager every few rounds and releasing the frames
+            # behind the eager point. On a cluster swap for reliable
+            # checkpoint(dir) to also survive executor loss.
+            ranks = n.join(contribs, "id", "left")
+            if has_dangling:
+                ranks = ranks.crossJoin(F.broadcast(dang))
+            ranks = ranks.select(
+                "id",
+                (base + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))).alias("rank"),
+            )
+            ranks = scope.local_ckpt(ranks, eager=(it == iterations - 1))
+
+        # final ranks go to a RELIABLE checkpoint (disk files, re-readable
+        # on demand) so the scope can release every block it holds; on a
+        # cluster the checkpoint dir is HDFS/S3 and doubles as fault
+        # tolerance
+        return finalize_iterative(ranks.select(F.col("id").alias(id_col), "rank"))
 
 
 def canonical_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:

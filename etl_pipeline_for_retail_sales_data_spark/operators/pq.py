@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..cachectl import finalize_iterative, local_ckpt, release_ckpt
+from ..cachectl import finalize_iterative, scoped_cache
 from ..functions import spread
 from .similarity import as_double
 
@@ -110,8 +110,8 @@ def _assign_codes(
     clustering._assign trick: (dist, code) is unique per scored row, so
     sv is never compared) — pq_train's centroid update then reads sv
     straight off the assignment instead of joining back to the subs
-    frame, removing one (vec_id, sub)-keyed join per Lloyd round (r12,
-    guide §2.4). Off by default: encode/search consumers don't need the
+    frame, removing one (vec_id, sub)-keyed join per Lloyd round. Off
+    by default: encode/search consumers don't need the
     extra shuffle bytes."""
     scored = subs.join(F.broadcast(codebooks), "sub").select(
         "vec_id", "sub", "sv", "code",
@@ -144,49 +144,41 @@ def pq_train(
     broadcast-join assignment + one per-(sub, code, dim) mean, identical
     in shape to operators/clustering.kmeans_assign but covering all m
     subspaces at once. Returns (sub, code, centroid)."""
-    subs = _subvectors(emb, m, id_col, vec_col, d=d).persist()
-    seeds = (
-        subs.withColumn(
-            "__rn",
-            F.row_number().over(
-                Window.partitionBy("sub").orderBy(F.col("vec_id").asc())
-            ),
+    with scoped_cache() as scope:
+        subs = scope.persist(_subvectors(emb, m, id_col, vec_col, d=d))
+        seeds = (
+            subs.withColumn(
+                "__rn",
+                F.row_number().over(
+                    Window.partitionBy("sub").orderBy(F.col("vec_id").asc())
+                ),
+            )
+            .filter(F.col("__rn") <= ksub)
+            .select("sub", (F.col("__rn") - 1).alias("code"), F.col("sv").alias("centroid"))
         )
-        .filter(F.col("__rn") <= ksub)
-        .select("sub", (F.col("__rn") - 1).alias("code"), F.col("sv").alias("centroid"))
-    )
-    codebooks = local_ckpt(seeds, eager=True)
-    rounds = [codebooks]
-    for it in range(iters):
-        # sv rides the argmin struct (with_sv) — no join back to subs
-        # per round (r12; values identical, the struct min never
-        # compares sv because (dist, code) is unique per candidate row)
-        assigned = _assign_codes(subs, codebooks, with_sv=True)
-        expl = assigned.select("sub", "code", F.posexplode("sv").alias("dim", "x"))
-        # LAZY checkpoints chain the rounds into ONE job, fired by the
-        # final round's eager materialization (previously each round ran
-        # its own eager-checkpoint job). Intermediate codebooks are
-        # m*ksub rows (~128), so holding every round until the chain has
-        # materialized costs nothing — and unpersisting earlier would
-        # strand an unmaterialized checkpoint whose truncated lineage
-        # cannot recompute.
-        codebooks = (
-            expl.groupBy("sub", "code", "dim")
-            .agg(F.avg("x").alias("mu"))
-            .groupBy("sub", "code")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "mu"))).alias("s"))
-            .select("sub", "code", F.transform("s", lambda t: t["mu"]).alias("centroid"))
-        )
-        codebooks = local_ckpt(codebooks, eager=(it == iters - 1))
-        rounds.append(codebooks)
-    # tiny (m*ksub rows) but long-lived: a RELIABLE checkpoint lets every
-    # local checkpoint release here instead of pinning storage-pool blocks
-    # for the session (cachectl.py)
-    out = finalize_iterative(codebooks)
-    subs.unpersist()
-    for frame in rounds:
-        release_ckpt(frame)
-    return out
+        codebooks = scope.local_ckpt(seeds, eager=True)
+        for it in range(iters):
+            # sv rides the argmin struct (with_sv) — no join back to subs
+            # per round (values identical: the struct min never compares
+            # sv because (dist, code) is unique per candidate row)
+            assigned = _assign_codes(subs, codebooks, with_sv=True)
+            expl = assigned.select("sub", "code", F.posexplode("sv").alias("dim", "x"))
+            # LAZY checkpoints chain the rounds into ONE job, fired by the
+            # final round's eager materialization. Intermediate codebooks
+            # are m*ksub rows (~128), so the scope holding every round
+            # until the chain has materialized costs nothing.
+            codebooks = (
+                expl.groupBy("sub", "code", "dim")
+                .agg(F.avg("x").alias("mu"))
+                .groupBy("sub", "code")
+                .agg(F.array_sort(F.collect_list(F.struct("dim", "mu"))).alias("s"))
+                .select("sub", "code", F.transform("s", lambda t: t["mu"]).alias("centroid"))
+            )
+            codebooks = scope.local_ckpt(codebooks, eager=(it == iters - 1))
+        # tiny (m*ksub rows) but long-lived: a RELIABLE checkpoint lets the
+        # scope release every local checkpoint instead of pinning
+        # storage-pool blocks for the session
+        return finalize_iterative(codebooks)
 
 
 def pq_encode(

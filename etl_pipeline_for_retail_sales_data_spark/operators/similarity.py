@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..cachectl import finalize_iterative, local_ckpt, release_ckpt
+from ..cachectl import finalize_iterative, scoped_cache
 from ..functions import spread
 
 
@@ -631,82 +631,73 @@ def mmr_topk(
         )
     )
     w = Window.partitionBy("q_id").orderBy(F.col("rel").desc(), F.col("cand"))
-    cand = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= n_candidates)
-        .select("q_id", "cand", "e", "en", "rel")
-        .persist()
-    )
-    a = cand.select(
-        "q_id", F.col("cand").alias("ca"), F.col("e").alias("va"), F.col("en").alias("na")
-    )
-    b = cand.select(
-        "q_id", F.col("cand").alias("cb"), F.col("e").alias("vb"), F.col("en").alias("nb")
-    )
-    cc = (
-        a.join(b, "q_id")
-        .select(
-            "q_id",
-            "ca",
-            "cb",
-            (dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias("s"),
+    with scoped_cache() as scope:
+        cand = scope.persist(
+            scored.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") <= n_candidates)
+            .select("q_id", "cand", "e", "en", "rel")
         )
-        .persist()
-    )
-    state = (
-        cand.select("q_id", "cand", "rel")
-        .withColumn("maxsim", F.lit(-1.0))
-        .withColumn("rnk", F.lit(None).cast("int"))
-        .withColumn("mmr", F.lit(None).cast("double"))
-    )
-    rounds = []
-    for t in range(1, k + 1):
-        score = F.lit(lamc) * F.col("rel") - F.lit(divc) * F.col("maxsim")
-        pick = (
-            state.filter(F.col("rnk").isNull())
-            .groupBy("q_id")
-            .agg(F.min(F.struct((-score).alias("ns"), F.col("cand").alias("cand"))).alias("__p"))
-            .select("q_id", F.col("__p.cand").alias("pick"))
+        a = cand.select(
+            "q_id", F.col("cand").alias("ca"), F.col("e").alias("va"), F.col("en").alias("na")
         )
-        selected_now = F.col("rnk").isNull() & (F.col("cand") == F.col("pick"))
-        state = (
-            state.join(F.broadcast(pick), "q_id", "left")
-            .join(
-                cc.select(
-                    "q_id", F.col("ca").alias("cand"), F.col("cb").alias("pick"), "s"
-                ),
-                ["q_id", "cand", "pick"],
-                "left",
-            )
-            .select(
+        b = cand.select(
+            "q_id", F.col("cand").alias("cb"), F.col("e").alias("vb"), F.col("en").alias("nb")
+        )
+        cc = scope.persist(
+            a.join(b, "q_id").select(
                 "q_id",
-                "cand",
-                "rel",
-                F.greatest(F.col("maxsim"), F.coalesce(F.col("s"), F.lit(-1.0))).alias(
-                    "maxsim"
-                ),
-                F.when(selected_now, F.lit(t)).otherwise(F.col("rnk")).alias("rnk"),
-                F.when(selected_now, score).otherwise(F.col("mmr")).alias("mmr"),
+                "ca",
+                "cb",
+                (dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias("s"),
             )
         )
-        state = local_ckpt(state, eager=(t == k))
-        rounds.append(state)
-    # final selection to a RELIABLE checkpoint so every round's local
-    # checkpoint (and the cand/cc caches) release here (cachectl.py)
-    out = finalize_iterative(
-        state.filter(F.col("rnk").isNotNull()).select(
-            "q_id",
-            F.col("cand").alias("doc_id"),
-            "rnk",
-            round6(F.col("rel")).alias("rel"),
-            round6(F.col("mmr")).alias("mmr"),
+        state = (
+            cand.select("q_id", "cand", "rel")
+            .withColumn("maxsim", F.lit(-1.0))
+            .withColumn("rnk", F.lit(None).cast("int"))
+            .withColumn("mmr", F.lit(None).cast("double"))
         )
-    )
-    cand.unpersist()
-    cc.unpersist()
-    for frame in rounds:
-        release_ckpt(frame)
-    return out
+        for t in range(1, k + 1):
+            score = F.lit(lamc) * F.col("rel") - F.lit(divc) * F.col("maxsim")
+            pick = (
+                state.filter(F.col("rnk").isNull())
+                .groupBy("q_id")
+                .agg(F.min(F.struct((-score).alias("ns"), F.col("cand").alias("cand"))).alias("__p"))
+                .select("q_id", F.col("__p.cand").alias("pick"))
+            )
+            selected_now = F.col("rnk").isNull() & (F.col("cand") == F.col("pick"))
+            state = (
+                state.join(F.broadcast(pick), "q_id", "left")
+                .join(
+                    cc.select(
+                        "q_id", F.col("ca").alias("cand"), F.col("cb").alias("pick"), "s"
+                    ),
+                    ["q_id", "cand", "pick"],
+                    "left",
+                )
+                .select(
+                    "q_id",
+                    "cand",
+                    "rel",
+                    F.greatest(F.col("maxsim"), F.coalesce(F.col("s"), F.lit(-1.0))).alias(
+                        "maxsim"
+                    ),
+                    F.when(selected_now, F.lit(t)).otherwise(F.col("rnk")).alias("rnk"),
+                    F.when(selected_now, score).otherwise(F.col("mmr")).alias("mmr"),
+                )
+            )
+            state = scope.local_ckpt(state, eager=(t == k))
+        # final selection to a RELIABLE checkpoint so the scope can release
+        # every round's local checkpoint and the cand/cc caches
+        return finalize_iterative(
+            state.filter(F.col("rnk").isNotNull()).select(
+                "q_id",
+                F.col("cand").alias("doc_id"),
+                "rnk",
+                round6(F.col("rel")).alias("rel"),
+                round6(F.col("mmr")).alias("mmr"),
+            )
+        )
 
 
 def binary_quantize(

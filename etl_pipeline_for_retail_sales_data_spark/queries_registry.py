@@ -4983,7 +4983,15 @@ def q_qdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     digest conserves the row count exactly, the cell count respects the
     4k size bound (3k + floor-threshold slack), and the estimate from a
     MERGE of two half-digests (split by orderkey parity) honors the same
-    rank bound — the mergeability contract, checked end-to-end."""
+    rank bound — the mergeability contract, checked end-to-end.
+
+    Scale bound: ``qdigest_build_split`` raises ``ValueError`` once
+    lineitem holds more than ``hist_cap`` (2,000,000) DISTINCT cent
+    values. The cap counts distinct values, not histogram rows (a value
+    yields up to three rows, one per split state), so a table with
+    between ``hist_cap`` and ``3*hist_cap`` distinct values fails
+    loudly instead of building an over-cap histogram on the driver;
+    raise ``hist_cap`` deliberately if the driver can hold it."""
     from .operators.sketches import (
         qdigest_build_split,
         qdigest_merge,

@@ -73,7 +73,7 @@ CASES = {
         {"BroadcastExchange": 2, "Exchange": 3, "MapInPandas": 1, "ReusedExchange": 3, "Window": 4},
     ),
     # default hot_df="p99": the probe and the main plan both read one
-    # shared_frame checkpoint, so the shingle pass runs at construction
+    # finalize_iterative checkpoint, so the shingle pass runs at construction
     # and the main plan holds no MapInPandas and no Window at all
     "ngram_jaccard_exact_p99": (
         lambda docs: D.ngram_jaccard_pairs(docs, threshold=0.1, max_df=None, n_salts=8),

@@ -61,15 +61,19 @@ print("ABRESULT " + json.dumps(out))
 
 
 def run_side(checkout: str, sf: str, names: list[str]) -> dict[str, float]:
+    # both legs run from a fresh neutral cwd, so neither side can import
+    # the package (driver or executor) through its working directory;
+    # the checkout reaches executors through the prepended PYTHONPATH
     env = dict(os.environ)
-    env["PYTHONPATH"] = checkout
-    proc = subprocess.run(
-        [sys.executable, "-c", _RUNNER, checkout, sf, ",".join(names)],
-        capture_output=True,
-        text=True,
-        env=env,
-        cwd=checkout,
-    )
+    env["PYTHONPATH"] = os.pathsep.join(p for p in (checkout, env.get("PYTHONPATH")) if p)
+    with tempfile.TemporaryDirectory(prefix="ab-bench-cwd-") as cwd:
+        proc = subprocess.run(
+            [sys.executable, "-c", _RUNNER, checkout, sf, ",".join(names)],
+            capture_output=True,
+            text=True,
+            env=env,
+            cwd=cwd,
+        )
     for line in proc.stdout.splitlines():
         if line.startswith("ABRESULT "):
             return json.loads(line[len("ABRESULT "):])
@@ -86,6 +90,7 @@ def main() -> None:
     ap.add_argument("--out", default=None, help="JSON artifact path")
     ap.add_argument("--all-headline", action="store_true", help="use bench.py HEADLINE list")
     args = ap.parse_args()
+    args.sf = os.path.abspath(args.sf)  # the legs run from a temp cwd
 
     names = list(args.queries)
     if args.all_headline:
