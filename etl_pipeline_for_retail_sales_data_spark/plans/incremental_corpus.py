@@ -17,14 +17,16 @@ Scale design:
   into ``n_buckets`` partitions (size n_buckets for the cluster at
   production scale; the default 8 is the local-test shape). Asserted on
   the physical plan in tests/test_incremental_corpus.py.
-- Crash atomicity: a batch publishes its corpus rows and its state rows
-  with a single commit point. Both datasets are first written to hidden
-  ``.staged-<token>`` directories (invisible to every reader), then a
-  journal marker (one atomic rename) commits the batch, then the staged
-  files move into the visible roots. :func:`recover_state` — run at the
-  start of every ingest — rolls a crashed batch FORWARD when the marker
-  exists and BACK when it does not, so a blind retry of a crashed run
-  can never double-ingest (tested stepwise via the crash hooks).
+- Crash atomicity: every leg runs one batch as one :func:`_epoch_txn`
+  (lease → recovery → epoch guard → pinned meta → stage → commit; the
+  contract is stated there). Corpus rows and state rows are staged in
+  hidden ``.staged-<token>`` directories, a journal marker (one atomic
+  rename) commits the batch, then the staged files move into the
+  visible roots; :func:`recover_state` rolls a crashed batch FORWARD
+  when the marker exists and BACK when it does not, so a blind retry
+  can never double-ingest (tested stepwise via the crash hooks). The
+  sketch leg and the compactions replace a whole directory instead,
+  through :func:`_swap_dir`.
 - Idempotency: re-ingesting the same batch is a no-op — every digest is
   already in the state, so zero rows are appended.
 - Within-batch duplicates collapse to min(doc_id) BEFORE the history
@@ -82,19 +84,17 @@ from pyspark.sql import functions as F
 from ..cachectl import scoped_cache
 from ..fsutil import HadoopFS
 
-STATE_ROOTS = (
-    "corpus",
-    "fingerprints",
-    "corpus_neardup",
-    "neardup_bands",
-    "corpus_embdup",
-    "embdup_buckets",
-    "corpus_bloom",
-    "bloom_bits",
-    "corpus_semantic",
-    "semantic_members",
-    "kmv_sketch",
-)
+# each leg's roots under state_dir: (corpus, state), except the sketch
+# leg, whose single root IS its state
+_LEG_ROOTS = {
+    "exact": ("corpus", "fingerprints"),
+    "neardup": ("corpus_neardup", "neardup_bands"),
+    "embdup": ("corpus_embdup", "embdup_buckets"),
+    "bloom": ("corpus_bloom", "bloom_bits"),
+    "semantic": ("corpus_semantic", "semantic_members"),
+    "sketch": ("kmv_sketch",),
+}
+STATE_ROOTS = tuple(rel for rels in _LEG_ROOTS.values() for rel in rels)
 DEFAULT_BUCKETS = 8  # local-test shape; size for the cluster in production
 # defaults pinned into _meta on first ingest (module docstring)
 DEFAULT_MINHASH = {"k": 16, "bands": 4, "n": 3}
@@ -165,7 +165,7 @@ def _ensure_state_table(
     shuffles. ``root`` is fully QUALIFIED first (scheme + absolute
     path), so a bare path and its file:// twin resolve to ONE table and
     the location comparison below never false-negatives into a
-    drop-and-recreate per call (r8 advice)."""
+    drop-and-recreate per call."""
     root = HadoopFS(spark, root).qualified(root)
     name = _state_table_name(root)
     if spark.catalog.tableExists(name):
@@ -254,7 +254,7 @@ def state_meta(spark: SparkSession, state_dir: str, leg: str) -> dict:
     """The parameters pinned for ``leg`` ('exact' | 'neardup' | 'embdup'
     | 'bloom') at this state_dir, or {} before the first ingest.
 
-    Lock-free-reader hardening (r10 ADVICE): on non-file schemes
+    Lock-free-reader hardening: on non-file schemes
     ``replace_atomic``'s rename_replace is delete-then-rename, so the
     main file is briefly ABSENT mid-update while the fully-written
     ``.tmp`` sibling still holds the payload (on file:// the
@@ -355,7 +355,7 @@ def _meta_buckets(spark: SparkSession, state_dir: str, leg: str, n_buckets) -> i
     pre-upgrade state, or a non-file store losing BOTH the main file
     and its .tmp sibling) and the caller gave no explicit value,
     defaulting would scan with a possibly-wrong bucket count and
-    silently drop rows — raise instead (r10 ADVICE; mirrors
+    silently drop rows — raise instead (mirrors
     :func:`_resolve_meta`'s write-path refusal)."""
     pinned = state_meta(spark, state_dir, leg).get("n_buckets")
     if pinned is not None:
@@ -440,8 +440,8 @@ def _writer_lease(spark: SparkSession, state_dir: str):
         # delete the rival's fresh lock). First READ the lock and skip
         # the release entirely when the token is foreign — a holder
         # that overran the TTL and was reclaimed then never touches the
-        # reclaimer's live lock (one overrun alone is harmless; r10
-        # ADVICE). The read is advisory: if a rival reclaims between
+        # reclaimer's live lock (one overrun alone is harmless).
+        # The read is advisory: if a rival reclaims between
         # the read and the rename, the rename-then-verify below is the
         # authoritative check. Rename the lock to a private name —
         # exactly one renamer of a given file succeeds — verify the
@@ -632,16 +632,6 @@ def maintain_state(
     return out
 
 
-_LEG_ROOTS = {
-    "exact": ("corpus", "fingerprints"),
-    "neardup": ("corpus_neardup", "neardup_bands"),
-    "embdup": ("corpus_embdup", "embdup_buckets"),
-    "bloom": ("corpus_bloom", "bloom_bits"),
-    "semantic": ("corpus_semantic", "semantic_members"),
-    "sketch": ("kmv_sketch",),
-}
-
-
 def state_report(spark: SparkSession, state_dir: str) -> dict:
     """Operational snapshot of an incremental state_dir — the monitoring
     endpoint a daily loop's runbook reads before/after each window:
@@ -656,7 +646,7 @@ def state_report(spark: SparkSession, state_dir: str) -> dict:
     - ``pending_journal``: marker tokens awaiting roll-forward — empty
       except between a crash and the next touch;
     - ``epochs_recorded`` and ``lease`` (holder + age, or None);
-    - ``composed_batches`` / ``composed_recent`` (r10 verdict #6): one
+    - ``composed_batches`` / ``composed_recent``: one
       audit record per :func:`ingest_batch_all` call with every leg's
       funnel side by side — count plus the 8 most recent records.
 
@@ -692,7 +682,7 @@ def state_report(spark: SparkSession, state_dir: str) -> dict:
                 else 0
             )
         if leg == "semantic" and row["state_rows"]:
-            # per-cell occupancy (r9 verdict #4): the verify join's
+            # per-cell occupancy: the verify join's
             # candidate volume is Σ|cell|² — a drifting corpus
             # concentrating mass in few cells degrades toward per-cell
             # quadratic, and this is the number the runbook watches to
@@ -735,7 +725,7 @@ def state_report(spark: SparkSession, state_dir: str) -> dict:
             }
         except Exception:
             lease = None
-    # composed-batch history (r10 verdict #6): one record per
+    # composed-batch history: one record per
     # ingest_batch_all call, every leg's funnel side by side. Sequence-
     # prefixed names make lexical order the ingest order; the report
     # carries the count plus the 8 most recent records (bounded).
@@ -831,9 +821,8 @@ def recover_state(spark: SparkSession, state_dir: str) -> dict[str, int]:
        committed, readers just could not see all of it yet;
     2. orphan ``.staged-*`` dirs with no marker → roll BACK (delete):
        the batch never committed, the retry will redo it from scratch;
-    3. half-swapped compactions → roll forward/back per the
-       ``._compact_tmp`` / ``._compact_old`` state machine (same
-       contract as sinks.recover_merge).
+    3. half-swapped directories (:func:`_swap_dir`) → roll forward/back
+       per :func:`_recover_swap` (same contract as sinks.recover_merge).
 
     Locking: ingest/compaction call this INSIDE their writer lease; a
     caller invoking it standalone (ops tooling) mutates state and must
@@ -898,6 +887,82 @@ def _commit(
         _refresh_state_table(spark, _join(state_dir, rel))
 
 
+class _EpochTxn:
+    """One batch's open transaction (see :func:`_epoch_txn`)."""
+
+    def __init__(self, spark, state_dir, fs, eff, epoch_id, crash):
+        self.spark, self.state_dir, self.fs, self.eff = spark, state_dir, fs, eff
+        self.epoch_id, self._crash = epoch_id, crash
+        self.token = uuid.uuid4().hex
+        self.staged: list[str] = []
+
+    def _stage_path(self, rel: str) -> str:
+        self.staged.append(rel)
+        return _staged_dir(_join(self.state_dir, rel), self.token)
+
+    def stage_parquet(self, rel: str, df: DataFrame) -> None:
+        df.write.parquet(self._stage_path(rel))
+
+    def stage_bucketed(
+        self, rel: str, df: DataFrame, cols: list[str], n_buckets: int
+    ) -> None:
+        _staged_bucketed_write(df, self._stage_path(rel), cols, n_buckets)
+
+    def commit(self) -> None:
+        # an epoch-tagged batch that staged nothing (all duplicates)
+        # still commits its empty marker, so redelivery skips wholesale
+        if self.staged or self.epoch_id is not None:
+            _commit(
+                self.spark, self.state_dir, self.staged, self.token,
+                epoch_id=self.epoch_id, _crash=self._crash,
+            )
+
+
+@contextmanager
+def _epoch_txn(
+    spark: SparkSession,
+    state_dir: str,
+    leg: str,
+    given: dict,
+    defaults: dict,
+    *,
+    epoch_id=None,
+    extra: dict | None = None,
+    _locked: bool = False,
+    _crash: str | None = None,
+):
+    """The commit protocol every ingest leg runs, in one place:
+
+    1. take the writer lease and run :func:`recover_state`, so a blind
+       retry starts from a settled state (both skipped when ``_locked``:
+       :func:`ingest_batch_all` holds the lease and has recovered);
+    2. the epoch guard, AFTER recovery, so an epoch a crash left
+       journaled is rolled forward first and then recognized: a
+       committed ``epoch_id`` yields ``None`` and the leg returns
+       ``None`` without reading its batch;
+    3. pin-or-validate the leg's parameters (:func:`_resolve_meta`);
+    4. yield an :class:`_EpochTxn` carrying the resolved ``eff`` meta,
+       ``fs`` and one random ``token``. ``stage_parquet`` /
+       ``stage_bucketed`` write a frame to ``<root>/.staged-<token>``
+       (invisible to readers) and record the root; ``commit()`` writes
+       the journal marker (the single commit point, with ``epoch_id``
+       riding it) and publishes every staged root (:func:`_commit`).
+
+    A crash before the marker rolls the batch back on the next touch, a
+    crash after it rolls the batch forward, so corpus and state rows of
+    one batch land both or neither and the epoch flag never separates
+    from them."""
+    with nullcontext() if _locked else _writer_lease(spark, state_dir):
+        if not _locked:
+            recover_state(spark, state_dir)
+        if epoch_id is not None and epoch_committed(spark, state_dir, epoch_id):
+            yield None
+            return
+        fs = HadoopFS(spark, state_dir)
+        eff = _resolve_meta(fs, state_dir, leg, given, defaults, extra)
+        yield _EpochTxn(spark, state_dir, fs, eff, epoch_id, _crash)
+
+
 # ---------------------------------------------------------------------------
 # ingestion loops
 # ---------------------------------------------------------------------------
@@ -930,10 +995,15 @@ def neardup_band_state(
     )
 
 
-def _text_digest(text_col: str):
-    # null text digests to the sentinel class (module docstring) instead
-    # of a null key that would anti-join through on every batch forever
-    return F.coalesce(F.md5(F.col(text_col)), F.lit(_NULL_TEXT_DIGEST)).alias("digest")
+def _batch_unique(batch: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """Within-batch exact dedup for the digest legs: ``batch`` plus a
+    ``digest`` column, one row per digest (the min-id keeper). Null
+    text digests to the sentinel class (module docstring) instead of a
+    null key that would anti-join through on every batch forever."""
+    digest = F.coalesce(F.md5(F.col(text_col)), F.lit(_NULL_TEXT_DIGEST)).alias("digest")
+    keyed = batch.select(digest, *batch.columns)
+    keeper = keyed.groupBy("digest").agg(F.min(id_col).alias(id_col))
+    return keyed.join(keeper, ["digest", id_col])
 
 
 def ingest_batch(
@@ -951,44 +1021,30 @@ def ingest_batch(
 
     Returns the ingestion funnel as exact counts:
     ``{"n_batch", "n_within_dup", "n_hist_dup", "n_accepted"}`` — or
-    ``None`` when ``epoch_id`` is set and that epoch already committed
-    (the redelivery guard, checked AFTER recovery so a crashed-then-
-    rolled-forward epoch is recognized; streaming/ingest.py relies on
-    this ordering). Appends accepted docs to ``state_dir/corpus`` and
-    their digests to the bucketed ``state_dir/fingerprints`` state,
-    atomically (both or neither — see the module docstring's commit
-    protocol). A crashed run can be retried blindly: :func:`recover_state`
-    runs first and either finishes or undoes the crashed batch, so the
-    retry never double-appends. When ``epoch_id`` is set, the epoch
-    marker commits even for an all-duplicate batch (empty staged list),
-    so every delivered epoch is skippable on redelivery. ``n_buckets``
-    pins into ``_meta`` on first ingest and defaults from it after."""
-    with nullcontext() if _locked else _writer_lease(spark, state_dir):
-        if not _locked:
-            recover_state(spark, state_dir)
-        if epoch_id is not None and epoch_committed(spark, state_dir, epoch_id):
+    ``None`` when ``epoch_id`` is set and that epoch already committed.
+    Appends accepted docs to ``state_dir/corpus`` and their digests to
+    the bucketed ``state_dir/fingerprints`` state in one
+    :func:`_epoch_txn` (both or neither; a crashed run can be retried
+    blindly and never double-appends). ``n_buckets`` pins into
+    ``_meta`` on first ingest and defaults from it after."""
+    # the exact leg is INHERENTLY keeper-state: only novel digests
+    # append, and a dup's digest equals its keeper's digest by
+    # definition, so "all" vs "keepers" cannot differ — recorded in
+    # _meta at first pin (via extra, NOT given: it is not a caller
+    # parameter, so a pre-upgrade re-pin must not demand it)
+    with _epoch_txn(
+        spark, state_dir, "exact",
+        {"n_buckets": n_buckets}, {"n_buckets": DEFAULT_BUCKETS},
+        epoch_id=epoch_id, extra={"state_mode": "keepers"},
+        _locked=_locked, _crash=_crash,
+    ) as txn:
+        if txn is None:
             return None
-        fs = HadoopFS(spark, state_dir)
-        # the exact leg is INHERENTLY keeper-state: only novel digests
-        # append, and a dup's digest equals its keeper's digest by
-        # definition, so "all" vs "keepers" cannot differ — recorded in
-        # _meta at first pin (via extra, NOT given: it is not a caller
-        # parameter, so a pre-upgrade re-pin must not demand it)
-        eff = _resolve_meta(
-            fs, state_dir, "exact",
-            {"n_buckets": n_buckets}, {"n_buckets": DEFAULT_BUCKETS},
-            extra={"state_mode": "keepers"},
-        )
-        n_buckets = int(eff["n_buckets"])
-        corpus_root = _join(state_dir, "corpus")
-        fp_root = _join(state_dir, "fingerprints")
-
+        n_buckets = int(txn.eff["n_buckets"])
         n_batch = batch.count()
 
         # 1. within-batch exact dedup: keep min(doc_id) per digest
-        keyed = batch.select(_text_digest(text_col), *batch.columns)
-        keeper = keyed.groupBy("digest").agg(F.min(id_col).alias(id_col))
-        batch_unique = keyed.join(keeper, ["digest", id_col])
+        batch_unique = _batch_unique(batch, text_col, id_col)
         # 2. history check: one equi-join against the bucketed state — the
         # state side plans no Exchange, only the batch shuffles
         hist = fingerprint_state(spark, state_dir, id_col, n_buckets).select("digest")
@@ -1000,31 +1056,13 @@ def ingest_batch(
         with scoped_cache(batch_unique, novel):
             n_unique = batch_unique.count()
             n_accepted = novel.count()
-
-            # 3. stage novel docs + their fingerprints, commit atomically;
-            # an epoch-tagged all-duplicate batch commits the (empty)
-            # marker so redelivery skips wholesale
-            token = uuid.uuid4().hex
-            staged: list[str] = []
+            # 3. stage novel docs + their fingerprints, commit atomically
             if n_accepted:
-                novel.drop("digest").write.parquet(_staged_dir(corpus_root, token))
-                _staged_bucketed_write(
-                    novel.select("digest", id_col),
-                    _staged_dir(fp_root, token),
-                    ["digest"],
-                    n_buckets,
+                txn.stage_parquet("corpus", novel.drop("digest"))
+                txn.stage_bucketed(
+                    "fingerprints", novel.select("digest", id_col), ["digest"], n_buckets
                 )
-                staged = ["corpus", "fingerprints"]
-            if staged or epoch_id is not None:
-                _commit(
-                    spark,
-                    state_dir,
-                    staged,
-                    token,
-                    epoch_id=epoch_id,
-                    _crash=_crash,
-                )
-
+            txn.commit()
     return {
         "n_batch": n_batch,
         "n_within_dup": n_batch - n_unique,
@@ -1095,16 +1133,13 @@ def ingest_batch_neardup(
         )
         return bk.withColumnRenamed("doc_id", id_col) if id_col != "doc_id" else bk
 
-    res = _ingest_keyed(
-        spark,
-        batch,
-        state_dir,
+    return _ingest_keyed(
+        spark, batch, state_dir, "neardup",
         keys_of=keys_of,
+        classify=_any_shared_key,
         key_cols=("band", "bk"),
-        corpus_rel="corpus_neardup",
-        state_rel="neardup_bands",
         id_col=id_col,
-        leg="neardup",
+        tag="neardup",
         given={"k": k, "bands": bands, "n": n, "n_buckets": n_buckets},
         defaults={**DEFAULT_MINHASH, "n_buckets": DEFAULT_BUCKETS},
         state_mode=state_mode,
@@ -1112,15 +1147,6 @@ def ingest_batch_neardup(
         _crash=_crash,
         _locked=_locked,
     )
-    if res is None:
-        return None
-    n_batch, n_hist, n_within, n_accepted = res
-    return {
-        "n_batch": n_batch,
-        "n_hist_neardup": n_hist,
-        "n_within_neardup": n_within,
-        "n_accepted": n_accepted,
-    }
 
 
 def ingest_batch_embdup(
@@ -1179,16 +1205,13 @@ def ingest_batch_embdup(
     def keys_of(eff: dict) -> DataFrame:
         return multitable_buckets(batch, eff["tables"], id_col=id_col, vec_col=vec_col)
 
-    res = _ingest_keyed(
-        spark,
-        batch,
-        state_dir,
+    return _ingest_keyed(
+        spark, batch, state_dir, "embdup",
         keys_of=keys_of,
+        classify=_any_shared_key,
         key_cols=("tbl", "bucket"),
-        corpus_rel="corpus_embdup",
-        state_rel="embdup_buckets",
         id_col=id_col,
-        leg="embdup",
+        tag="embdup",
         given={"tables_digest": tables_digest, "n_buckets": n_buckets},
         defaults={"n_buckets": DEFAULT_BUCKETS},
         meta_extra={"tables": tables} if tables is not None else None,
@@ -1197,15 +1220,6 @@ def ingest_batch_embdup(
         _crash=_crash,
         _locked=_locked,
     )
-    if res is None:
-        return None
-    n_batch, n_hist, n_within, n_accepted = res
-    return {
-        "n_batch": n_batch,
-        "n_hist_embdup": n_hist,
-        "n_within_embdup": n_within,
-        "n_accepted": n_accepted,
-    }
 
 
 DEFAULT_SEMANTIC_THRESHOLD = 0.92
@@ -1226,49 +1240,36 @@ def ingest_batch_semantic(
     _locked: bool = False,
 ) -> dict[str, int] | None:
     """Incremental SEMANTIC near-duplicate ingestion — the fifth leg of
-    the incremental family (r8 verdict #8), and the one that VERIFIES
-    instead of trusting buckets: each batch vector is assigned to its
-    nearest FIXED centroid (operators/clustering.assign_to_centroids —
-    the SemDeDup partitioning with pinned centroids instead of per-run
-    k-means, so assignments are stable across batches), then checked by
-    EXACT rounded cosine against the historical members of that one
-    cluster. A vector is a historical semantic dup iff some same-cluster
+    the incremental family, and the one that VERIFIES instead of
+    trusting buckets: each batch vector is assigned to its nearest FIXED
+    centroid (operators/clustering.assign_to_centroids — the SemDeDup
+    partitioning with pinned centroids instead of per-run k-means, so
+    assignments are stable across batches), then checked by EXACT
+    rounded cosine against the historical members of that one cluster.
+    A vector is a historical semantic dup iff some same-cluster
     historical member scores ≥ ``threshold``; within the batch, iff a
     smaller-id same-cluster member does (exists-semantics, same
     SQL-expressible contract as the other keyed legs; oracled twin
-    ``incremental_semantic_funnel``).
+    ``incremental_semantic_funnel``). Runs through :func:`_ingest_keyed`
+    with the cell-plus-cosine predicate join as its classification.
 
     vs ``ingest_batch_embdup``: the hyperplane leg compares CODES (fast,
     recall bounded by the planes), this leg compares VECTORS but only
     within one centroid cell — candidate volume is |batch-cell| ×
     |state-cell|, controlled by the centroid count exactly as SemDeDup
-    controls Σ|cluster|² by k. State = (vec_id, cluster, uv) for every
-    ingested vector, BUCKETED on cluster: the per-batch verify join
+    controls Σ|cluster|² by k. State = (vec_id, cluster, uv) per
+    appended vector, BUCKETED on cluster: the per-batch verify join
     never shuffles the state side and never rescans the corpus. Size
     the centroid count like SemDeDup's k (≈√n) so cells stay bounded;
     n_buckets ≤ centroid count keeps buckets non-empty.
 
-    ``state_mode`` (r9 verdict #3) — what joins the member state:
-
-    - ``"all"`` (default): EVERY batch row's (cluster, uv) appends —
-      seen-semantics, one state row per ever-ingested vector, so the
-      per-batch verify cost grows with gross ingested volume forever.
-    - ``"keepers"``: only ACCEPTED rows append. Classification checks
-      history against keepers only, which is equivalent under
-      exists-semantics whenever a dup's match chain passes through a
-      keeper, and may legitimately differ on dup-of-dup chains (a new
-      vector near a rejected dup but not near any keeper classifies
-      NOVEL here, DUP under "all"); the oracled twin
-      ``incremental_semantic_keepers_funnel`` pins exactly the
-      keeper-replay semantics (within-batch stays exists-semantics
-      against ALL smaller-id batch members — only the historical check
-      narrows). State size = corpus keepers, not gross volume, so the
-      verify join's candidate growth (the 1.48x @x16 probe slope)
-      follows the DEDUPED corpus — the right mode for long-lived
-      corpora with high duplicate rates. Replay/crash-retry stability
-      is unchanged: a replayed batch re-classifies identically (its
-      keepers are in state, its dups still match within-batch) and
-      appends nothing.
+    ``state_mode`` ("all" | "keepers", trade documented on
+    :func:`_ingest_keyed`; oracled keepers twin
+    ``incremental_semantic_keepers_funnel``): under "all" the per-batch
+    verify cost grows with gross ingested volume forever; under
+    "keepers" the verify join's candidate growth (the 1.48x @x16 probe
+    slope) follows the DEDUPED corpus — the right mode for long-lived
+    corpora with high duplicate rates.
 
     ``centroids`` (the key function), ``threshold``, and
     ``state_mode`` PIN into ``_meta`` on first ingest — later calls
@@ -1282,19 +1283,10 @@ def ingest_batch_semantic(
     accepted, later nulls classify as dups — the exact leg's null-text
     semantics; the LSH legs instead document-and-accept signature-less
     rows), so replays classify 100% historical for EVERY row and blind
-    crash-retries never double-append. Crash-atomic via the shared
-    journal commit; ``epoch_id`` rides the marker.
+    crash-retries never double-append.
 
     Returns ``{"n_batch", "n_hist_semdup", "n_within_semdup",
-    "n_accepted"}`` — or ``None`` on a redelivered committed epoch.
-
-    Deliberately NOT routed through :func:`_ingest_keyed`: that engine's
-    classification shape is key EQUALITY + the bucket-min trick for
-    within-batch; this leg needs a predicate join (equality on the cell
-    AND a cosine verify) and a pairwise within-batch join — hooks for
-    both would turn the shared engine into configuration soup. The
-    commit protocol pieces (lease, recovery, meta, staged commit) ARE
-    the shared primitives both paths call."""
+    "n_accepted"}`` — or ``None`` on a redelivered committed epoch."""
     from ..operators.clustering import assign_to_centroids
     from ..operators.similarity import dot, round6
 
@@ -1309,124 +1301,68 @@ def ingest_batch_semantic(
             "(they pin into _meta and later calls may omit them)"
         )
 
-    with nullcontext() if _locked else _writer_lease(spark, state_dir):
-        if not _locked:
-            recover_state(spark, state_dir)
-        if epoch_id is not None and epoch_committed(spark, state_dir, epoch_id):
-            return None
-        fs = HadoopFS(spark, state_dir)
-        if state_mode is not None and state_mode not in ("all", "keepers"):
-            raise ValueError(
-                f"state_mode must be 'all' or 'keepers', got {state_mode!r}"
-            )
-        eff = _resolve_meta(
-            fs, state_dir, "semantic",
-            {
-                "centroids_digest": cent_digest,
-                "threshold": threshold,
-                "n_buckets": n_buckets,
-                "state_mode": state_mode,
-            },
-            {
-                "threshold": DEFAULT_SEMANTIC_THRESHOLD,
-                "n_buckets": DEFAULT_BUCKETS,
-                "state_mode": "all",
-            },
-            extra={"centroids": centroids} if centroids is not None else None,
-        )
-        thr = float(eff["threshold"])
-        n_buckets = int(eff["n_buckets"])
-        keepers_only = eff["state_mode"] == "keepers"
-        state_root = _join(state_dir, "semantic_members")
-        corpus_root = _join(state_dir, "corpus_semantic")
-
-        n_batch = batch.count()
+    def keys_of(eff: dict) -> DataFrame:
         # null-vector rows join the member state under the SENTINEL cell
         # -1 (cosine is undefined for them but equality is not: a second
         # null-embedding doc IS a duplicate of the first — the exact
         # leg's null-text sentinel in embedding form). Without this, a
         # replay or blind crash-retry would re-accept every null row and
         # double-append it to the corpus.
-        assigned = assign_to_centroids(batch, eff["centroids"], id_col, vec_col)
         nulls = batch.filter(F.col(vec_col).isNull()).select(
             F.col(id_col),
             F.lit(-1).alias("cluster"),
             F.lit(None).cast("array<double>").alias("uv"),
         )
-        keys = assigned.unionByName(nulls)
-        is_sentinel = F.col("A.cluster") == F.lit(-1)
-        with scoped_cache(keys):
-            state = _ensure_state_table(
-                spark, state_root, keys, ["cluster"], n_buckets
+        assigned = assign_to_centroids(batch, eff["centroids"], id_col, vec_col)
+        return assigned.unionByName(nulls)
+
+    def classify(keys: DataFrame, state: DataFrame, eff: dict):
+        # a pair matches within one centroid cell when its rounded cosine
+        # is ≥ thr; sentinel rows match on cell equality alone.
+        # Historical: the cluster is the equi-key (state side bucketed,
+        # no Exchange), the cosine a join filter. Within-batch: a
+        # smaller-id member of the same cell matches (exists-semantics —
+        # the smaller member's own classification is irrelevant, keeping
+        # the contract SQL-expressible).
+        thr = float(eff["threshold"])
+        a = keys.alias("A")
+
+        def same_cell(alias: str):
+            return F.col("A.cluster") == F.col(f"{alias}.cluster")
+
+        def near(alias: str):
+            return (F.col("A.cluster") == F.lit(-1)) | (
+                round6(dot(F.col("A.uv"), F.col(f"{alias}.uv"))) >= thr
             )
-            # historical: EXACT rounded cosine ≥ thr against the same
-            # centroid cell's members — equi-key is the cluster (state
-            # side bucketed, no Exchange), the cosine is a join filter;
-            # sentinel rows match on cell equality alone
-            a, s = keys.alias("A"), state.alias("S")
-            hist_ids = (
-                a.join(
-                    s,
-                    (F.col("A.cluster") == F.col("S.cluster"))
-                    & (is_sentinel | (round6(dot(F.col("A.uv"), F.col("S.uv"))) >= thr)),
-                    "left_semi",
-                )
-                .select(id_col)
-                .distinct()
-            )
-            # within-batch: a smaller-id same-cluster batch member scores
-            # ≥ thr (exists-semantics — the smaller member's own
-            # classification is irrelevant, keeping the contract
-            # SQL-expressible)
-            b2 = keys.alias("B")
-            within_ids = (
-                a.join(
-                    b2,
-                    (F.col("A.cluster") == F.col("B.cluster"))
-                    & (F.col(f"B.{id_col}") < F.col(f"A.{id_col}"))
-                    & (is_sentinel | (round6(dot(F.col("A.uv"), F.col("B.uv"))) >= thr)),
-                    "left_semi",
-                )
-                .select(id_col)
-                .distinct()
-            )
-            with scoped_cache(hist_ids):
-                n_hist = hist_ids.count()
-                n_within = within_ids.join(hist_ids, id_col, "left_anti").count()
-                accepted = (
-                    batch.join(hist_ids, id_col, "left_anti")
-                    .join(within_ids, id_col, "left_anti")
-                )
-                n_accepted = accepted.count()
-                staged: list[str] = []
-                token = uuid.uuid4().hex
-                if n_accepted:
-                    accepted.write.parquet(_staged_dir(corpus_root, token))
-                    staged.append("corpus_semantic")
-                # "all": seen-semantics — every batch member joins the
-                # state; "keepers": only accepted rows do (docstring)
-                state_new = (
-                    keys.join(accepted.select(id_col), id_col, "left_semi")
-                    if keepers_only
-                    else keys
-                )
-                if (n_accepted if keepers_only else n_batch) > 0:
-                    _staged_bucketed_write(
-                        state_new, _staged_dir(state_root, token),
-                        ["cluster"], n_buckets,
-                    )
-                    staged.append("semantic_members")
-                if staged or epoch_id is not None:
-                    _commit(
-                        spark, state_dir, staged, token,
-                        epoch_id=epoch_id, _crash=_crash,
-                    )
-    return {
-        "n_batch": n_batch,
-        "n_hist_semdup": n_hist,
-        "n_within_semdup": n_within,
-        "n_accepted": n_accepted,
-    }
+
+        hist_ids = a.join(
+            state.alias("S"), same_cell("S") & near("S"), "left_semi"
+        ).select(id_col).distinct()
+        smaller = F.col(f"B.{id_col}") < F.col(f"A.{id_col}")
+        within_ids = a.join(
+            keys.alias("B"), same_cell("B") & smaller & near("B"), "left_semi"
+        ).select(id_col).distinct()
+        return hist_ids, within_ids
+
+    return _ingest_keyed(
+        spark, batch, state_dir, "semantic",
+        keys_of=keys_of,
+        classify=classify,
+        key_cols=("cluster",),
+        id_col=id_col,
+        tag="semdup",
+        given={
+            "centroids_digest": cent_digest,
+            "threshold": threshold,
+            "n_buckets": n_buckets,
+        },
+        defaults={"threshold": DEFAULT_SEMANTIC_THRESHOLD, "n_buckets": DEFAULT_BUCKETS},
+        meta_extra={"centroids": centroids} if centroids is not None else None,
+        state_mode=state_mode,
+        epoch_id=epoch_id,
+        _crash=_crash,
+        _locked=_locked,
+    )
 
 
 def compact_semantic_state(
@@ -1486,10 +1422,10 @@ def recentroid_state(
     centroids: list,
     _crash: str | None = None,
 ) -> dict[str, int]:
-    """Centroid lifecycle migration for the semantic leg (r9 verdict
-    #4): a corpus whose distribution drifts concentrates mass in few
-    cells, degrading the verify join toward per-cell quadratic
-    (state_report's ``cells.sum_sq`` is the watch number). This rewrites
+    """Centroid lifecycle migration for the semantic leg: a corpus
+    whose distribution drifts concentrates mass in few cells, degrading
+    the verify join toward per-cell quadratic (state_report's
+    ``cells.sum_sq`` is the watch number). This rewrites
     ``semantic_members`` under NEW centroids — every stored unit vector
     reassigns to its nearest new centroid by the same rounded-argmax as
     assign_to_centroids (ties to the lowest index; sentinel null rows
@@ -1568,7 +1504,7 @@ def recentroid_state(
         fs.delete(stage, True)
         _staged_bucketed_write(reassigned, stage, ["cluster"], n_buckets)
         fs.touch_atomic(_join(stage, f"_centroids-{digest}"))
-        tmp, old = root + "._compact_tmp", root + "._compact_old"
+        tmp = root + "._compact_tmp"
         if fs.exists(tmp):
             fs.delete(tmp, True)
         if not fs.rename(stage, tmp):
@@ -1578,15 +1514,7 @@ def recentroid_state(
 
         # 3. the compaction swap (crash from here on rolls FORWARD)
         n = spark.read.parquet(tmp).count()
-        if fs.exists(old):
-            fs.delete(old, True)
-        if not fs.rename(root, old):
-            raise IOError(f"recentroid: rename {root} -> {old} failed")
-        if _crash == "mid_swap":
-            raise SimulatedCrash("mid_swap")
-        if not fs.rename(tmp, root):
-            raise IOError(f"recentroid: rename {tmp} -> {root} failed")
-        fs.delete(old, True)
+        _swap_dir(fs, root, tmp, _crash)
         if _crash == "before_finalize":
             raise SimulatedCrash("before_finalize")
 
@@ -1600,16 +1528,34 @@ def recentroid_state(
     return {"n_members": n, "n_cells": n_cells}
 
 
+def _any_shared_key(keys: DataFrame, state: DataFrame, eff: dict):
+    """The LSH legs' classification over key frames ``(id, *key_cols)``:
+    historical iff ANY of a row's keys is in the state; within-batch iff
+    a smaller-id batch row shares a key (bucket-min: the smallest id per
+    batch key)."""
+    id_col, *kc = keys.columns
+    hist_ids = keys.join(state.select(*kc), kc, "left_semi").select(id_col).distinct()
+    bucket_min = keys.groupBy(*kc).agg(F.min(id_col).alias("__min_id"))
+    within_ids = (
+        keys.join(bucket_min, kc)
+        .filter(F.col("__min_id") < F.col(id_col))
+        .select(id_col)
+        .distinct()
+    )
+    return hist_ids, within_ids
+
+
 def _ingest_keyed(
     spark: SparkSession,
     batch: DataFrame,
     state_dir: str,
-    keys_of,
-    key_cols: tuple,
-    corpus_rel: str,
-    state_rel: str,
-    id_col: str,
     leg: str,
+    *,
+    keys_of,
+    classify,
+    key_cols: tuple,
+    id_col: str,
+    tag: str,
     given: dict,
     defaults: dict,
     epoch_id,
@@ -1617,30 +1563,37 @@ def _ingest_keyed(
     meta_extra: dict | None = None,
     state_mode: str | None = None,
     _locked: bool = False,
-) -> tuple[int, int, int, int] | None:
-    """Shared engine of the LSH-keyed incremental loops: classify a batch
-    against a persistent bucketed key state (historical iff ANY key seen;
-    within-batch iff a smaller-id member shares a key), append accepted
-    rows + the batch's keys atomically. ``keys_of(effective_params)``
-    builds the key frame AFTER the leg's parameters resolve against the
-    pinned ``_meta`` (so the key function provably matches the stored
-    state). Returns (n_batch, n_hist, n_within, n_accepted), or None on
-    a redelivered committed epoch.
+) -> dict[str, int] | None:
+    """Shared engine of the keyed incremental legs (neardup, embdup,
+    semantic): classify a batch against a persistent key state bucketed
+    on ``key_cols``, then append accepted rows to the leg's corpus root
+    and the batch's keys to its state root in one :func:`_epoch_txn`.
 
-    ``state_mode`` (r10 verdict #3 — the semantic leg's r10 feature,
-    propagated to the keyed legs): ``"all"`` (default) appends EVERY
-    batch row's keys — seen-semantics, state grows with gross ingested
-    volume; ``"keepers"`` appends only ACCEPTED rows' keys, so the
-    per-batch history join's candidate volume follows the DEDUPED
-    corpus. Under exists-semantics the modes agree whenever a dup's
-    match chain passes through a keeper and may legitimately differ on
-    dup-of-dup chains (a new row whose only shared key belongs to a
-    REJECTED dup classifies novel in keepers mode) — the oracled twins
-    ``incremental_{neardup,embdup}_keepers_funnel`` pin exactly that
-    semantics. Within-batch stays exists-semantics against ALL
-    smaller-id batch members; replay stability is unchanged (a replayed
-    batch's keepers are in state, its dups still match, nothing
-    re-appends). Pinned into ``_meta`` like every other leg parameter.
+    ``keys_of(eff)`` builds the key frame ``(id, *key_cols[, payload])``
+    AFTER the leg's parameters resolve against the pinned ``_meta`` (so
+    the key function provably matches the stored state); the state
+    table is registered from that frame's schema. ``classify(keys,
+    state, eff)`` returns ``(hist_ids, within_ids)``: the LSH legs pass
+    :func:`_any_shared_key`, the semantic leg its cell-plus-cosine
+    verify. Everything after classification is shared. Returns
+    ``{"n_batch", "n_hist_<tag>", "n_within_<tag>", "n_accepted"}``, or
+    None on a redelivered committed epoch.
+
+    ``state_mode`` (validated before the lease, pinned into ``_meta``):
+    ``"all"`` (default) appends EVERY batch row's keys — seen-semantics,
+    state grows with gross ingested volume; replays classify 100%
+    historical and append again, harmless duplicates in an
+    existence-checked state that compaction collapses. ``"keepers"``
+    appends only ACCEPTED rows' keys, so the history join's candidate
+    volume follows the DEDUPED corpus. Under exists-semantics the modes
+    agree whenever a dup's match chain passes through a keeper and may
+    legitimately differ on dup-of-dup chains (a new row whose only
+    match is a REJECTED dup classifies novel in keepers mode) — the
+    oracled twins ``incremental_{neardup,embdup,semantic}_keepers_funnel``
+    pin exactly that semantics. Within-batch stays exists-semantics
+    against ALL smaller-id batch members; replay stability is unchanged
+    (a replayed batch's keepers are in state, its dups still match,
+    nothing re-appends).
 
     SIZING NOTE for coarse key functions (ingest-probe finding): keeper
     narrowing compounds with key coarseness — under exists-semantics a
@@ -1656,45 +1609,27 @@ def _ingest_keyed(
     rows on the x4-duplicated probe)."""
     if state_mode is not None and state_mode not in ("all", "keepers"):
         raise ValueError(f"state_mode must be 'all' or 'keepers', got {state_mode!r}")
-    with nullcontext() if _locked else _writer_lease(spark, state_dir):
-        if not _locked:
-            recover_state(spark, state_dir)
-        if epoch_id is not None and epoch_committed(spark, state_dir, epoch_id):
+    corpus_rel, state_rel = _LEG_ROOTS[leg]
+    kc = list(key_cols)
+    with _epoch_txn(
+        spark, state_dir, leg,
+        {**given, "state_mode": state_mode}, {**defaults, "state_mode": "all"},
+        epoch_id=epoch_id, extra=meta_extra, _locked=_locked, _crash=_crash,
+    ) as txn:
+        if txn is None:
             return None
-        fs = HadoopFS(spark, state_dir)
-        eff = _resolve_meta(
-            fs,
-            state_dir,
-            leg,
-            {**given, "state_mode": state_mode},
-            {**defaults, "state_mode": "all"},
-            extra=meta_extra,
-        )
-        keepers_only = eff["state_mode"] == "keepers"
-        n_buckets = int(eff["n_buckets"])
-        keys = keys_of(eff)
-        state_root = _join(state_dir, state_rel)
-        corpus_root = _join(state_dir, corpus_rel)
-        kc = list(key_cols)
-
+        keepers_only = txn.eff["state_mode"] == "keepers"
+        n_buckets = int(txn.eff["n_buckets"])
+        keys = keys_of(txn.eff)
         n_batch = batch.count()
         # every consumer (both classification counts, both staged writes)
         # runs inside the scope, so the cache releases with zero recompute
         # (cachectl.py); the key-derivation pass runs once
         with scoped_cache(keys):
             state = _ensure_state_table(
-                spark, state_root, keys.select(id_col, *kc), kc, n_buckets
-            ).select(*kc)
-            hist_ids = keys.join(state, kc, "left_semi").select(id_col).distinct()
-            # within-batch: smallest id per batch bucket; a row with ANY
-            # bucket whose min is a smaller id is a within-batch near-dup
-            bucket_min = keys.groupBy(*kc).agg(F.min(id_col).alias("__min_id"))
-            within_ids = (
-                keys.join(bucket_min, kc)
-                .filter(F.col("__min_id") < F.col(id_col))
-                .select(id_col)
-                .distinct()
+                spark, _join(state_dir, state_rel), keys, kc, n_buckets
             )
+            hist_ids, within_ids = classify(keys, state, txn.eff)
             with scoped_cache(hist_ids):
                 n_hist = hist_ids.count()
                 n_within = within_ids.join(hist_ids, id_col, "left_anti").count()
@@ -1703,38 +1638,22 @@ def _ingest_keyed(
                     .join(within_ids, id_col, "left_anti")
                 )
                 n_accepted = accepted.count()
-                staged: list[str] = []
-                token = uuid.uuid4().hex
                 if n_accepted:
-                    accepted.write.parquet(_staged_dir(corpus_root, token))
-                    staged.append(corpus_rel)
-                # "all": seen-semantics — append EVERY batch row's keys
-                # (replays then classify 100% historical and append again:
-                # harmless duplicates in an existence-checked state;
-                # compaction collapses them). "keepers": only accepted
-                # rows' keys append (docstring — state follows the
-                # deduped corpus)
+                    txn.stage_parquet(corpus_rel, accepted)
                 state_keys = (
                     keys.join(accepted.select(id_col), id_col, "left_semi")
                     if keepers_only
                     else keys
                 )
                 if (n_accepted if keepers_only else n_batch) > 0:
-                    _staged_bucketed_write(
-                        state_keys.select(id_col, *kc),
-                        _staged_dir(state_root, token),
-                        kc,
-                        n_buckets,
-                    )
-                    staged.append(state_rel)
-                # an epoch-tagged empty/all-dup batch still commits its
-                # (possibly empty) marker so redelivery skips wholesale
-                if staged or epoch_id is not None:
-                    _commit(
-                        spark, state_dir, staged, token,
-                        epoch_id=epoch_id, _crash=_crash,
-                    )
-    return n_batch, n_hist, n_within, n_accepted
+                    txn.stage_bucketed(state_rel, state_keys, kc, n_buckets)
+                txn.commit()
+    return {
+        "n_batch": n_batch,
+        f"n_hist_{tag}": n_hist,
+        f"n_within_{tag}": n_within,
+        "n_accepted": n_accepted,
+    }
 
 
 def ingest_batch_bloom(
@@ -1786,32 +1705,25 @@ def ingest_batch_bloom(
     sentinel class (module docstring), so the theorem covers them."""
     from ..operators.dedup import bloom_positions
 
-    with nullcontext() if _locked else _writer_lease(spark, state_dir):
-        if not _locked:
-            recover_state(spark, state_dir)
-        if epoch_id is not None and epoch_committed(spark, state_dir, epoch_id):
+    with _epoch_txn(
+        spark, state_dir, "bloom",
+        {"m_bits": m_bits, "k": k, "n_buckets": n_buckets},
+        {**DEFAULT_BLOOM, "n_buckets": DEFAULT_BUCKETS},
+        epoch_id=epoch_id, _locked=_locked, _crash=_crash,
+    ) as txn:
+        if txn is None:
             return None
-        fs = HadoopFS(spark, state_dir)
-        eff = _resolve_meta(
-            fs, state_dir, "bloom",
-            {"m_bits": m_bits, "k": k, "n_buckets": n_buckets},
-            {**DEFAULT_BLOOM, "n_buckets": DEFAULT_BUCKETS},
-        )
+        eff = txn.eff
         m_bits, k, n_buckets = int(eff["m_bits"]), int(eff["k"]), int(eff["n_buckets"])
-        corpus_root = _join(state_dir, "corpus_bloom")
-        bits_root = _join(state_dir, "bloom_bits")
-
         n_batch = batch.count()
-        keyed = batch.select(_text_digest(text_col), *batch.columns)
-        keeper = keyed.groupBy("digest").agg(F.min(id_col).alias(id_col))
-        batch_unique = keyed.join(keeper, ["digest", id_col])
+        batch_unique = _batch_unique(batch, text_col, id_col)
 
         probes = batch_unique.select(
             id_col, F.explode(bloom_positions(F.col("digest"), m_bits, k)).alias("pos")
         ).distinct()
         state = _ensure_state_table(
             spark,
-            bits_root,
+            _join(state_dir, "bloom_bits"),
             spark.createDataFrame([], "pos long"),
             ["pos"],
             n_buckets,
@@ -1833,31 +1745,13 @@ def ingest_batch_bloom(
             n_hist = hist_ids.count()
             accepted = batch_unique.join(hist_ids, id_col, "left_anti")
             n_accepted = n_unique - n_hist
-            token = uuid.uuid4().hex
-            staged: list[str] = []
             if n_accepted:
-                accepted.drop("digest").write.parquet(_staged_dir(corpus_root, token))
-                new_bits = (
-                    accepted.select(
-                        F.explode(
-                            bloom_positions(F.col("digest"), m_bits, k)
-                        ).alias("pos")
-                    ).distinct()
-                )
-                _staged_bucketed_write(
-                    new_bits, _staged_dir(bits_root, token), ["pos"], n_buckets
-                )
-                staged = ["corpus_bloom", "bloom_bits"]
-            if staged or epoch_id is not None:
-                _commit(
-                    spark,
-                    state_dir,
-                    staged,
-                    token,
-                    epoch_id=epoch_id,
-                    _crash=_crash,
-                )
-
+                txn.stage_parquet("corpus_bloom", accepted.drop("digest"))
+                new_bits = accepted.select(
+                    F.explode(bloom_positions(F.col("digest"), m_bits, k)).alias("pos")
+                ).distinct()
+                txn.stage_bucketed("bloom_bits", new_bits, ["pos"], n_buckets)
+            txn.commit()
     return {
         "n_batch": n_batch,
         "n_within_dup": n_batch - n_unique,
@@ -1909,6 +1803,25 @@ def _recover_swap(fs: HadoopFS, root: str) -> str:
     return "absent"
 
 
+def _swap_dir(fs: HadoopFS, root: str, tmp: str, _crash: str | None = None) -> None:
+    """Swap the complete directory ``tmp`` in as ``root``: root →
+    ``._compact_old``, tmp → root, drop old. The only non-atomic window
+    (root renamed away, tmp not yet in) is settled by
+    :func:`_recover_swap` on the next touch: it rolls the complete tmp
+    forward. A missing root (a first sketch merge) just skips the first
+    rename."""
+    old = root + "._compact_old"
+    if fs.exists(old):
+        fs.delete(old, True)
+    if fs.exists(root) and not fs.rename(root, old):
+        raise IOError(f"swap: rename {root} -> {old} failed")
+    if _crash == "mid_swap":
+        raise SimulatedCrash("mid_swap")
+    if not fs.rename(tmp, root):
+        raise IOError(f"swap: rename {tmp} -> {root} failed")
+    fs.delete(old, True)
+
+
 def _compact_state(
     spark: SparkSession,
     state_dir: str,
@@ -1927,7 +1840,7 @@ def _compact_state(
     from the leg's pinned ``_meta`` first — so a compaction can never
     rewrite bucket files with a count the table's bucket spec disagrees
     with (Spark's bucketed scan trusts filename bucket ids; a mismatch
-    silently drops state rows — r8 advice). An explicit mismatching
+    silently drops state rows). An explicit mismatching
     value raises :class:`StateParamMismatch`."""
     with _writer_lease(spark, state_dir):
         fs = HadoopFS(spark, state_dir)
@@ -1962,19 +1875,13 @@ def _compact_state(
                 f"build) to compact it"
             )
         n_buckets = int(pinned) if pinned is not None else int(n_buckets)
-        tmp, old = root + "._compact_tmp", root + "._compact_old"
+        tmp = root + "._compact_tmp"
         compacted = spark.read.parquet(root).distinct()
         # the rewrite goes through the bucketed writer so the swapped-in
         # files keep the bucket layout the state table's scans rely on
         _staged_bucketed_write(compacted, tmp, bucket_cols, n_buckets)
         n = spark.read.parquet(tmp).count()
-        if fs.exists(old):
-            fs.delete(old, True)
-        if not fs.rename(root, old):
-            raise IOError(f"compact: rename {root} -> {old} failed")
-        if not fs.rename(tmp, root):
-            raise IOError(f"compact: rename {tmp} -> {root} failed")
-        fs.delete(old, True)
+        _swap_dir(fs, root, tmp)
         _refresh_state_table(spark, root)
         return n
 
@@ -2084,18 +1991,19 @@ def ingest_batch_sketch(
     mergeability property, replayed by DuckDB)."""
     from ..operators.sketches import kmv_group_sketches, shingle_hv
 
-    with nullcontext() if _locked else _writer_lease(spark, state_dir):
-        if not _locked:
-            recover_state(spark, state_dir)
-        if epoch_id is not None and epoch_committed(spark, state_dir, epoch_id):
+    # the transaction supplies lease, recovery, epoch guard and meta only:
+    # this leg swaps its whole state in and records the epoch after the
+    # swap, with no journal marker (so no _commits entry)
+    with _epoch_txn(
+        spark, state_dir, "sketch",
+        {"k": k, "n_buckets": n_buckets},
+        {"k": DEFAULT_SKETCH_K, "n_buckets": DEFAULT_BUCKETS},
+        epoch_id=epoch_id, _locked=_locked,
+    ) as txn:
+        if txn is None:
             return None
-        fs = HadoopFS(spark, state_dir)
-        eff = _resolve_meta(
-            fs, state_dir, "sketch",
-            {"k": k, "n_buckets": n_buckets},
-            {"k": DEFAULT_SKETCH_K, "n_buckets": DEFAULT_BUCKETS},
-        )
-        k_eff, n_buckets = int(eff["k"]), int(eff["n_buckets"])
+        fs = txn.fs
+        k_eff, n_buckets = int(txn.eff["k"]), int(txn.eff["n_buckets"])
         root = _join(state_dir, "kmv_sketch")
 
         n_batch = batch.count()
@@ -2104,7 +2012,7 @@ def ingest_batch_sketch(
             group_col, "hv"
         )
         merged = kmv_group_sketches(old.unionByName(el), group_col, k=k_eff)
-        tmp, old_dir = root + "._compact_tmp", root + "._compact_old"
+        tmp = root + "._compact_tmp"
         if fs.exists(tmp):
             fs.delete(tmp, True)
         _staged_bucketed_write(merged, tmp, [group_col], n_buckets)
@@ -2119,16 +2027,7 @@ def ingest_batch_sketch(
             .collect()[0]
         )
         n_rows, n_groups = int(row["n"]), int(row["g"])
-        if fs.exists(old_dir):
-            fs.delete(old_dir, True)
-        if fs.exists(root):
-            if not fs.rename(root, old_dir):
-                raise IOError(f"sketch swap: rename {root} -> {old_dir} failed")
-        if _crash == "mid_swap":
-            raise SimulatedCrash("mid_swap")
-        if not fs.rename(tmp, root):
-            raise IOError(f"sketch swap: rename {tmp} -> {root} failed")
-        fs.delete(old_dir, True)
+        _swap_dir(fs, root, tmp, _crash)
         if _crash == "before_epoch":
             raise SimulatedCrash("before_epoch")
         if epoch_id is not None:
@@ -2183,7 +2082,7 @@ def ingest_batch_all(
     sketch_k: int | None = None,
     epoch_id=None,
 ) -> dict[str, dict | None]:
-    """The five-leg funnel as ONE composed ingest (r9 verdict #8):
+    """The five-leg funnel as ONE composed ingest:
     a single writer-lease acquisition, a single recovery sweep, and one
     shared scan of each batch (``docs`` feeds the exact, near-dup and
     Bloom legs; ``vecs`` the embedding-LSH and semantic legs) instead
@@ -2211,12 +2110,11 @@ def ingest_batch_all(
     First composite ingest must carry ``tables`` (embdup) and
     ``centroids`` (semantic) when ``vecs`` is given, exactly like the
     individual legs; ``m_bits``/``bloom_k`` size the Bloom leg on a
-    compose-first state (r10 builder lead — previously compose-first
-    callers could only inherit the defaults) and ``state_mode``
+    compose-first state and ``state_mode``
     applies to every mode-switchable leg (neardup, embdup, semantic —
     the exact leg is inherently keepers, bloom's state is bounded by
     ``m_bits`` regardless). ``sketch_group_col`` OPTS IN the sixth,
-    mergeable-sketch leg (r11): when set (e.g. "source"), ``docs``
+    mergeable-sketch leg: when set (e.g. "source"), ``docs``
     also merges into the bounded per-group KMV sketch state under the
     same lease/recovery/scan, with its own leg-prefixed epoch
     (``sketch-<epoch>``) — opt-in because it needs a group column the
@@ -2277,7 +2175,7 @@ def ingest_batch_all(
                     state_mode=state_mode,
                     epoch_id=leg_epoch("semantic"), _locked=True,
                 )
-        # composite audit record (r10 verdict #6): ONE record per
+        # composite audit record: ONE record per
         # composed batch — all leg funnels side by side — so
         # state_report shows composed-batch history without joining
         # five per-leg logs. Written under the SAME lease after every
@@ -2295,7 +2193,7 @@ def ingest_batch_all(
         # redelivery check compares the EXACT epoch part (everything
         # after the sequence prefix's first dash) — epoch keys may
         # themselves contain '-' (streaming '<qid>-<batch>'), so an
-        # endswith test would false-match across epochs (r11 review)
+        # endswith test would false-match across epochs
         seen = {n.split("-", 1)[1] for n in names if "-" in n}
         if epoch_id is None or suffix not in seen:
             fs.touch_atomic(

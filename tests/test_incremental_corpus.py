@@ -209,6 +209,40 @@ def test_exact_ingest_crash_then_blind_retry_never_duplicates(
     assert fps.count() == 4 and fps.select("digest").distinct().count() == 4
 
 
+@pytest.mark.parametrize("crash", ["after_stage", "after_journal", "mid_publish"])
+def test_bloom_ingest_crash_then_blind_retry_never_duplicates(spark, tmp_path, crash):
+    """The Bloom leg stages two roots (corpus_bloom, bloom_bits) through
+    the same journal commit: a crash at any point followed by a BLIND
+    retry leaves one copy of every accepted doc, and the set bits equal
+    those of a crash-free run of the same batches."""
+    from etl_pipeline_for_retail_sales_data_spark.plans.incremental_corpus import (
+        ingest_batch_bloom,
+    )
+
+    crashed, clean = str(tmp_path / "crashed"), str(tmp_path / "clean")
+    day1 = _docs(spark, [(1, "alpha"), (2, "beta")])
+    day2 = _docs(spark, [(10, "gamma"), (11, "delta"), (12, "alpha")])
+    for state in (crashed, clean):
+        ingest_batch_bloom(spark, day1, state, m_bits=4096, k=4)
+    with pytest.raises(IC.SimulatedCrash):
+        ingest_batch_bloom(spark, day2, crashed, _crash=crash)
+    retry = ingest_batch_bloom(spark, day2, crashed)
+    assert retry["n_batch"] == 3
+    # rolled forward (retry rejects all 3) or back (retry accepts 2)
+    assert (retry["n_rejected_maybe_dup"], retry["n_accepted"]) in {(3, 0), (1, 2)}
+    assert ingest_batch_bloom(spark, day2, clean)["n_accepted"] == 2
+
+    corpus = spark.read.parquet(crashed + "/corpus_bloom")
+    assert corpus.count() == 4  # zero duplicate corpus rows
+    assert {r.doc_id for r in corpus.collect()} == {1, 2, 10, 11}
+
+    def positions(state):
+        bits = spark.read.parquet(state + "/bloom_bits").select("pos").distinct()
+        return {r.pos for r in bits.collect()}
+
+    assert positions(crashed) == positions(clean)
+
+
 @pytest.mark.parametrize("crash", ["after_journal", "mid_publish"])
 def test_neardup_ingest_crash_then_blind_retry_never_duplicates(
     spark, state_dir, crash
@@ -905,6 +939,24 @@ def test_semantic_ingest_replay_crash_meta_and_compaction(spark, state_dir):
     assert s3["n_hist_semdup"] == 4 and s3["n_accepted"] == 0
 
 
+def test_semantic_redelivered_epoch_with_bogus_state_mode_raises(spark, state_dir):
+    """state_mode is validated before the lease, so a bad value raises
+    even when the epoch already committed and the call would otherwise
+    return None without running."""
+    from etl_pipeline_for_retail_sales_data_spark.plans.incremental_corpus import (
+        ingest_batch_semantic,
+    )
+
+    batch = spark.createDataFrame(
+        [(1, [float(j) for j in range(64)])], "vec_id long, embedding array<double>"
+    )
+    cents = _sem_centroids_fixture()
+    assert ingest_batch_semantic(spark, batch, state_dir, cents, epoch_id=7) is not None
+    assert ingest_batch_semantic(spark, batch, state_dir, epoch_id=7) is None
+    with pytest.raises(ValueError, match="state_mode"):
+        ingest_batch_semantic(spark, batch, state_dir, epoch_id=7, state_mode="bogus")
+
+
 def test_semantic_verify_join_no_exchange_on_state_side(spark, state_dir):
     """The member state is bucketed on cluster: the per-batch verify
     join plans the state scan Bucketed with no Exchange above it —
@@ -957,12 +1009,12 @@ def test_semantic_verify_join_no_exchange_on_state_side(spark, state_dir):
 
 def test_stream_semantic_ingest_epoch_guard(spark, tmp_path):
     from etl_pipeline_for_retail_sales_data_spark.streaming.ingest import (
-        make_semantic_ingestor,
+        make_ingestor,
     )
 
     state = str(tmp_path / "state")
     cents = _sem_centroids_fixture()
-    ingest = make_semantic_ingestor(state, cents, epoch_ns="run-x")
+    ingest = make_ingestor("semantic", state, centroids=cents, epoch_ns="run-x")
     batch = spark.createDataFrame(
         [(1, [float(j) for j in range(64)]), (2, [-float(j) - 1.0 for j in range(64)])],
         "vec_id long, embedding array<double>",

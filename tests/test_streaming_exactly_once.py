@@ -319,7 +319,7 @@ def test_stream_neardup_ingest_end_to_end(spark, tmp_path):
     r8-advice regression: un-namespaced epoch ids made run 2's batch 0
     look like run 1's committed batch 0 and silently dropped it."""
     from etl_pipeline_for_retail_sales_data_spark.streaming.ingest import (
-        stream_ingest_neardup,
+        stream_ingest,
     )
 
     src = str(tmp_path / "src")
@@ -334,8 +334,8 @@ def test_stream_neardup_ingest_end_to_end(spark, tmp_path):
     ).write.parquet(src)
 
     stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    q = stream_ingest_neardup(
-        stream, state, "neardup_ingest_smoke", str(tmp_path / "cp1")
+    q = stream_ingest(
+        "neardup", stream, state, "neardup_ingest_smoke", str(tmp_path / "cp1")
     )
     q.awaitTermination(120)
 
@@ -352,7 +352,8 @@ def test_stream_neardup_ingest_end_to_end(spark, tmp_path):
             (10, "totally fresh never before seen sentence tokens"),
         ],
     ).write.parquet(src2)
-    q2 = stream_ingest_neardup(
+    q2 = stream_ingest(
+        "neardup",
         spark.readStream.schema("doc_id long, text string").parquet(src2),
         state,
         "neardup_ingest_smoke2",
@@ -373,7 +374,7 @@ def test_stream_neardup_keepers_mode_passes_through(spark, tmp_path):
         incremental_corpus as IC,
     )
     from etl_pipeline_for_retail_sales_data_spark.streaming.ingest import (
-        stream_ingest_neardup,
+        stream_ingest,
     )
 
     src = str(tmp_path / "src")
@@ -386,7 +387,8 @@ def test_stream_neardup_keepers_mode_passes_through(spark, tmp_path):
             (3, "completely different words entirely here now"),
         ],
     ).write.parquet(src)
-    q = stream_ingest_neardup(
+    q = stream_ingest(
+        "neardup",
         spark.readStream.schema("doc_id long, text string").parquet(src),
         state,
         "neardup_keepers_smoke",
@@ -407,7 +409,7 @@ def test_stream_same_checkpoint_restart_continues_epochs(spark, tmp_path):
     them as the next batch id under the same namespace — novel docs
     ingest, and re-running with nothing new re-delivers nothing."""
     from etl_pipeline_for_retail_sales_data_spark.streaming.ingest import (
-        stream_ingest_exact,
+        stream_ingest,
     )
 
     src = str(tmp_path / "src")
@@ -416,7 +418,8 @@ def test_stream_same_checkpoint_restart_continues_epochs(spark, tmp_path):
     _docs_df(spark, [(1, "alpha"), (2, "beta")]).write.parquet(src)
 
     def run():
-        q = stream_ingest_exact(
+        q = stream_ingest(
+            "exact",
             spark.readStream.schema("doc_id long, text string").parquet(src),
             state,
             "exact_restart_smoke",
@@ -440,17 +443,17 @@ def test_stream_distinct_checkpoints_get_disjoint_epoch_namespaces(spark, tmp_pa
     one state: the second must RUN (novel doc accepted), not be skipped
     as a redelivery of the first's epoch 0."""
     from etl_pipeline_for_retail_sales_data_spark.streaming.ingest import (
-        make_exact_ingestor,
+        make_ingestor,
     )
 
     state = str(tmp_path / "state")
     seen = []
-    a = make_exact_ingestor(
-        state, on_stats=lambda b, s: seen.append(("a", b, s["n_accepted"])),
+    a = make_ingestor(
+        "exact", state, on_stats=lambda b, s: seen.append(("a", b, s["n_accepted"])),
         epoch_ns="run-a",
     )
-    b = make_exact_ingestor(
-        state, on_stats=lambda b_, s: seen.append(("b", b_, s["n_accepted"])),
+    b = make_ingestor(
+        "exact", state, on_stats=lambda b_, s: seen.append(("b", b_, s["n_accepted"])),
         epoch_ns="run-b",
     )
     a(_docs_df(spark, [(1, "x")]), 0)
@@ -471,12 +474,12 @@ def test_stream_all_duplicate_epoch_redelivery_skips_wholesale(spark, tmp_path):
         incremental_corpus as IC,
     )
     from etl_pipeline_for_retail_sales_data_spark.streaming.ingest import (
-        make_exact_ingestor,
+        make_ingestor,
     )
 
     state = str(tmp_path / "state")
     calls = []
-    ingest = make_exact_ingestor(state, on_stats=lambda b, s: calls.append((b, s)))
+    ingest = make_ingestor("exact", state, on_stats=lambda b, s: calls.append((b, s)))
     ingest(_docs_df(spark, [(1, "x")]), 0)
     ingest(_docs_df(spark, [(9, "x")]), 1)  # all-duplicate epoch
     assert calls[1][1]["n_accepted"] == 0
@@ -494,12 +497,12 @@ def test_stream_redelivered_epoch_is_skipped_wholesale(spark, tmp_path):
     the append-only band state are byte-count-identical, stronger than
     classification-idempotence (which would re-append band rows)."""
     from etl_pipeline_for_retail_sales_data_spark.streaming.ingest import (
-        make_neardup_ingestor,
+        make_ingestor,
     )
 
     state = str(tmp_path / "state")
     seen = {}
-    ingest = make_neardup_ingestor(state, on_stats=lambda b, s: seen.setdefault(b, s))
+    ingest = make_ingestor("neardup", state, on_stats=lambda b, s: seen.setdefault(b, s))
     batch = _docs_df(spark, [(1, "one two three four five six")])
 
     ingest(batch, 0)
@@ -524,7 +527,7 @@ def test_stream_crashed_epoch_rolls_forward_then_skips(spark, tmp_path):
         incremental_corpus as IC,
     )
     from etl_pipeline_for_retail_sales_data_spark.streaming.ingest import (
-        make_neardup_ingestor,
+        make_ingestor,
     )
 
     state = str(tmp_path / "state")
@@ -534,7 +537,7 @@ def test_stream_crashed_epoch_rolls_forward_then_skips(spark, tmp_path):
     assert not IC.epoch_committed(spark, state, 5)
 
     calls = []
-    ingest = make_neardup_ingestor(state, on_stats=lambda b, s: calls.append(b))
+    ingest = make_ingestor("neardup", state, on_stats=lambda b, s: calls.append(b))
     ingest(batch, 5)  # redelivery of the crashed epoch
     assert calls == []  # skipped: recover_state rolled epoch 5 forward
     assert IC.epoch_committed(spark, state, 5)
@@ -544,11 +547,11 @@ def test_stream_crashed_epoch_rolls_forward_then_skips(spark, tmp_path):
 
 def test_stream_exact_ingest_epoch_guard(spark, tmp_path):
     from etl_pipeline_for_retail_sales_data_spark.streaming.ingest import (
-        make_exact_ingestor,
+        make_ingestor,
     )
 
     state = str(tmp_path / "state")
-    ingest = make_exact_ingestor(state)
+    ingest = make_ingestor("exact", state)
     batch = _docs_df(spark, [(1, "a"), (2, "a"), (3, "b")])
     ingest(batch, 0)
     ingest(batch, 0)  # redelivery
@@ -561,12 +564,12 @@ def test_stream_embdup_ingest_epoch_guard(spark, tmp_path):
     per epoch, redelivery skipped wholesale."""
     from etl_pipeline_for_retail_sales_data_spark.queries_registry import _lsh_tables
     from etl_pipeline_for_retail_sales_data_spark.streaming.ingest import (
-        make_embdup_ingestor,
+        make_ingestor,
     )
 
     state = str(tmp_path / "state")
     tables = _lsh_tables()
-    ingest = make_embdup_ingestor(state, tables)
+    ingest = make_ingestor("embdup", state, tables=tables)
     batch = spark.createDataFrame(
         [(1, [float(j) for j in range(64)]), (2, [-float(j) - 1.0 for j in range(64)])],
         "vec_id long, embedding array<double>",
@@ -582,11 +585,11 @@ def test_stream_embdup_ingest_epoch_guard(spark, tmp_path):
 
 def test_stream_bloom_ingest_epoch_guard(spark, tmp_path):
     from etl_pipeline_for_retail_sales_data_spark.streaming.ingest import (
-        make_bloom_ingestor,
+        make_ingestor,
     )
 
     state = str(tmp_path / "state")
-    ingest = make_bloom_ingestor(state, m_bits=4096, k=4)
+    ingest = make_ingestor("bloom", state, m_bits=4096, k=4)
     batch = _docs_df(spark, [(1, "aa"), (2, "aa"), (3, "bb")])
     ingest(batch, 0)
     ingest(batch, 0)  # redelivery: skipped wholesale
@@ -605,7 +608,7 @@ def test_stream_semantic_ingest_end_to_end(spark, tmp_path):
         _sem_centroids,
     )
     from etl_pipeline_for_retail_sales_data_spark.streaming.ingest import (
-        stream_ingest_semantic,
+        stream_ingest,
     )
 
     src = str(tmp_path / "src")
@@ -618,9 +621,10 @@ def test_stream_semantic_ingest_end_to_end(spark, tmp_path):
         ],
         "vec_id long, embedding array<double>",
     ).write.parquet(src)
-    q = stream_ingest_semantic(
+    q = stream_ingest(
+        "semantic",
         spark.readStream.schema("vec_id long, embedding array<double>").parquet(src),
-        state, cents, "sem_ingest_smoke", str(tmp_path / "cp1"),
+        state, "sem_ingest_smoke", str(tmp_path / "cp1"), centroids=cents,
     )
     q.awaitTermination(120)
     assert spark.read.parquet(state + "/corpus_semantic").count() == 1
@@ -635,9 +639,10 @@ def test_stream_semantic_ingest_end_to_end(spark, tmp_path):
         ],
         "vec_id long, embedding array<double>",
     ).write.parquet(src2)
-    q2 = stream_ingest_semantic(
+    q2 = stream_ingest(
+        "semantic",
         spark.readStream.schema("vec_id long, embedding array<double>").parquet(src2),
-        state, None, "sem_ingest_smoke2", str(tmp_path / "cp2"),
+        state, "sem_ingest_smoke2", str(tmp_path / "cp2"),
     )
     q2.awaitTermination(120)
     got = {r.vec_id for r in spark.read.parquet(state + "/corpus_semantic").collect()}
@@ -645,7 +650,7 @@ def test_stream_semantic_ingest_end_to_end(spark, tmp_path):
 
 def test_maintain_state_between_streaming_runs(spark, tmp_path):
     """r9 verdict #5: the nightly maintain_state pass runs BETWEEN two
-    availableNow runs of stream_ingest_semantic — epochs prune
+    availableNow runs of stream_ingest("semantic") — epochs prune
     per-namespace (highest kept), the member state compacts, the commit
     log rolls into one segment — and the stream continues on the SAME
     checkpoint afterwards: the surviving tail epoch still skips on
@@ -663,7 +668,7 @@ def test_maintain_state_between_streaming_runs(spark, tmp_path):
     )
     from etl_pipeline_for_retail_sales_data_spark.streaming.ingest import (
         _checkpoint_namespace,
-        stream_ingest_semantic,
+        stream_ingest,
     )
 
     src = str(tmp_path / "src")
@@ -680,17 +685,17 @@ def test_maintain_state_between_streaming_runs(spark, tmp_path):
         ],
         schema,
     ).write.parquet(src)
-    q = stream_ingest_semantic(
-        spark.readStream.schema(schema).parquet(src), state, cents,
-        "sem_maint", cp,
+    q = stream_ingest(
+        "semantic", spark.readStream.schema(schema).parquet(src), state,
+        "sem_maint", cp, centroids=cents,
     )
     q.awaitTermination(120)
     # run 2 (batch 1, SAME checkpoint): one more novel vector
     spark.createDataFrame(
         [(3, [(-1.0) ** j * (j + 1.0) for j in range(64)])], schema
     ).write.mode("append").parquet(src)
-    q2 = stream_ingest_semantic(
-        spark.readStream.schema(schema).parquet(src), state, None,
+    q2 = stream_ingest(
+        "semantic", spark.readStream.schema(schema).parquet(src), state,
         "sem_maint2", cp,
     )
     q2.awaitTermination(120)
@@ -738,8 +743,8 @@ def test_maintain_state_between_streaming_runs(spark, tmp_path):
         ],
         schema,
     ).write.mode("append").parquet(src)
-    q3 = stream_ingest_semantic(
-        spark.readStream.schema(schema).parquet(src), state, None,
+    q3 = stream_ingest(
+        "semantic", spark.readStream.schema(schema).parquet(src), state,
         "sem_maint3", cp,
     )
     q3.awaitTermination(120)
@@ -754,13 +759,13 @@ def test_stream_sketch_ingest_merges_and_skips_redelivery(spark, tmp_path):
     epoch id) leaves the state bit-identical, the algebraic idempotence
     the leg's replay safety rests on."""
     from etl_pipeline_for_retail_sales_data_spark.streaming.ingest import (
-        make_sketch_ingestor,
+        make_ingestor,
     )
 
     state = str(tmp_path / "state")
     stats = []
-    ingest = make_sketch_ingestor(
-        state, on_stats=lambda bid, s: stats.append((bid, s)), k=8
+    ingest = make_ingestor(
+        "sketch", state, on_stats=lambda bid, s: stats.append((bid, s)), k=8
     )
     batch = spark.createDataFrame(
         [
