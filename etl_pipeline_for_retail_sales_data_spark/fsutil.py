@@ -1,6 +1,6 @@
-"""Hadoop FileSystem helpers for driver-side state maintenance.
+"""Hadoop FileSystem helpers and the one directory swap.
 
-Stateful plans (plans/incremental_corpus.py) and swap-style rewrites
+Stateful plans (plans/incremental_corpus.py) and the sinks (sinks.py)
 need a handful of filesystem primitives — exists / rename / delete /
 list / atomic marker files. Using ``os``/``shutil`` silently pins the
 state to the driver's LOCAL disk; at 100 TB the state lives on
@@ -9,15 +9,32 @@ client resolved from the PATH'S OWN scheme (``file:///`` and bare paths
 hit RawLocalFileSystem, ``hdfs://`` the DFS client, …), so the same
 code runs against any Hadoop-compatible store.
 
+Every directory the package replaces wholesale is published by
+:func:`swap_in` and settled after a crash by :func:`recover_swap`. A
+suffix pair names the two siblings a swap uses: :data:`MERGE` for the
+sinks, :data:`COMPACT` for the ingest state's compactions and merges.
+
 Atomicity contract: ``rename`` is atomic on HDFS and local filesystems
-(the stores these protocols target). On S3A, rename is a copy+delete —
-state swaps there should go through a table format (Delta/Iceberg)
-instead; the callers document this.
+(the stores these protocols target). On S3A, rename is a copy+delete,
+so neither the ingest state nor a ``write_parquet`` / ``merge_parquet``
+swap is atomic there — use a table format (Delta/Iceberg) on S3A.
 """
 
 from __future__ import annotations
 
+import os
+from urllib.parse import urlparse
+
 from pyspark.sql import SparkSession
+
+# (staged sibling, previous copy) suffixes of a directory swap
+MERGE = ("._merge_tmp", "._merge_old")
+COMPACT = ("._compact_tmp", "._compact_old")
+
+
+class SimulatedCrash(RuntimeError):
+    """Raised by the test-only ``_crash`` hooks to exercise the recovery
+    protocol at exact points. Never raised in production paths."""
 
 
 class HadoopFS:
@@ -88,13 +105,7 @@ class HadoopFS:
         which is atomic on POSIX local filesystems. Other schemes
         (S3A's PUT-if-absent races) are out of contract, as the module
         docstring documents for rename."""
-        try:
-            scheme = self._fs.getScheme()
-        except Exception:
-            scheme = None
-        if scheme == "file":
-            import os
-
+        if self._is_local():
             local = self._local_path(p)
             try:
                 fd = os.open(local, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
@@ -139,20 +150,26 @@ class HadoopFS:
         previous publisher already placed the marker") — right for
         write-once markers, silently wrong for UPDATING a file; use
         :meth:`replace_atomic` for that."""
-        tmp = self._Path(p + ".tmp")
-        out = self._fs.create(tmp, True)
+        self._write(p + ".tmp", content)
+        if not self.rename(p + ".tmp", p):
+            # a concurrent/previous publisher already placed the marker
+            self.delete(p + ".tmp", False)
+
+    def _write(self, p: str, content: str) -> None:
+        out = self._fs.create(self._Path(p), True)
         try:
             if content:
                 out.write(bytearray(content.encode("utf-8")))
         finally:
             out.close()
-        if not self._fs.rename(tmp, self._Path(p)):
-            # a concurrent/previous publisher already placed the marker
-            self._fs.delete(tmp, False)
+
+    def _is_local(self) -> bool:
+        try:
+            return self._fs.getScheme() == "file"
+        except Exception:
+            return False
 
     def _local_path(self, p: str) -> str:
-        from urllib.parse import urlparse
-
         return urlparse(p).path if p.startswith("file:") else p
 
     def rename_replace(self, src: str, dst: str) -> None:
@@ -162,13 +179,7 @@ class HadoopFS:
         Other schemes fall back to delete-then-rename; the gap is only
         reachable by documented lock-free read-only snapshots, since
         every caller runs under the writer lease."""
-        try:
-            scheme = self._fs.getScheme()
-        except Exception:
-            scheme = None
-        if scheme == "file":
-            import os
-
+        if self._is_local():
             lsrc, ldst = self._local_path(src), self._local_path(dst)
 
             def crc(p: str) -> str:
@@ -195,14 +206,8 @@ class HadoopFS:
         """:meth:`touch_atomic` for files that may already exist: write
         a tmp sibling, then rename OVER the destination (atomic on
         file://). The update primitive for pinned metadata."""
-        tmp = p + ".tmp"
-        out = self._fs.create(self._Path(tmp), True)
-        try:
-            if content:
-                out.write(bytearray(content.encode("utf-8")))
-        finally:
-            out.close()
-        self.rename_replace(tmp, p)
+        self._write(p + ".tmp", content)
+        self.rename_replace(p + ".tmp", p)
 
     def read_text(self, p: str) -> str:
         # JVM-side copy into a byte array: a Python bytearray passed to
@@ -211,3 +216,57 @@ class HadoopFS:
         baos = self._jvm.java.io.ByteArrayOutputStream()
         self._jvm.org.apache.hadoop.io.IOUtils.copyBytes(inp, baos, 4096, True)
         return bytes(baos.toByteArray()).decode("utf-8")
+
+
+def recover_swap(fs: HadoopFS, root: str, suffixes: tuple[str, str]) -> str:
+    """Settle a crashed :func:`swap_in` at ``root`` deterministically.
+    The swap's only non-atomic window is between its two renames, so the
+    disk is in one of four states:
+
+    - root present → clear leftover staged/old siblings → ``"ok"``;
+    - root missing, complete staged sibling (``_SUCCESS`` present) → it
+      was fully written before the crash: promote it →
+      ``"rolled_forward"``;
+    - root missing, old sibling present → restore it, drop the torn
+      stage → ``"rolled_back"``;
+    - nothing at all → ``"absent"``."""
+    tmp, old = root + suffixes[0], root + suffixes[1]
+    if fs.exists(root):
+        for left in (tmp, old):
+            if fs.exists(left):
+                fs.delete(left, True)
+        return "ok"
+    if fs.exists(tmp + "/_SUCCESS"):
+        if not fs.rename(tmp, root):
+            raise IOError(f"recover_swap: rename {tmp} -> {root} failed")
+        if fs.exists(old):
+            fs.delete(old, True)
+        return "rolled_forward"
+    if fs.exists(old):
+        if not fs.rename(old, root):
+            raise IOError(f"recover_swap: rename {old} -> {root} failed")
+        if fs.exists(tmp):
+            fs.delete(tmp, True)
+        return "rolled_back"
+    return "absent"
+
+
+def swap_in(
+    fs: HadoopFS, root: str, suffixes: tuple[str, str], _crash: str | None = None
+) -> None:
+    """Swap the complete directory ``root + suffixes[0]`` in as ``root``:
+    root → ``root + suffixes[1]``, staged → root, drop old. The only
+    non-atomic window (root renamed away, stage not yet in) is settled
+    by :func:`recover_swap` on the next touch: it rolls the complete
+    stage forward. A missing root (a first write) just skips the first
+    rename."""
+    tmp, old = root + suffixes[0], root + suffixes[1]
+    if fs.exists(old):
+        fs.delete(old, True)
+    if fs.exists(root) and not fs.rename(root, old):
+        raise IOError(f"swap: rename {root} -> {old} failed")
+    if _crash == "mid_swap":
+        raise SimulatedCrash("mid_swap")
+    if not fs.rename(tmp, root):
+        raise IOError(f"swap: rename {tmp} -> {root} failed")
+    fs.delete(old, True)

@@ -26,7 +26,7 @@ Scale design:
   when the marker exists and BACK when it does not, so a blind retry
   can never double-ingest (tested stepwise via the crash hooks). The
   sketch leg and the compactions replace a whole directory instead,
-  through :func:`_swap_dir`.
+  through :func:`fsutil.swap_in`.
 - Idempotency: re-ingesting the same batch is a no-op — every digest is
   already in the state, so zero rows are appended.
 - Within-batch duplicates collapse to min(doc_id) BEFORE the history
@@ -82,7 +82,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..cachectl import scoped_cache
-from ..fsutil import HadoopFS
+from ..fsutil import COMPACT, HadoopFS, SimulatedCrash, recover_swap, swap_in
 
 # each leg's roots under state_dir: (corpus, state), except the sketch
 # leg, whose single root IS its state
@@ -104,11 +104,6 @@ LEASE_TTL_MS = 15 * 60 * 1000  # writer-lease expiry for hard-killed writers
 # md5 hex is 32 chars, so the 4-char sentinel can never collide with a
 # real digest; null-text docs form their own exact-dedup class
 _NULL_TEXT_DIGEST = "null"
-
-
-class SimulatedCrash(RuntimeError):
-    """Raised by the test-only ``_crash`` hooks to exercise the recovery
-    protocol at exact points. Never raised in production paths."""
 
 
 class ConcurrentWriter(RuntimeError):
@@ -821,8 +816,8 @@ def recover_state(spark: SparkSession, state_dir: str) -> dict[str, int]:
        committed, readers just could not see all of it yet;
     2. orphan ``.staged-*`` dirs with no marker → roll BACK (delete):
        the batch never committed, the retry will redo it from scratch;
-    3. half-swapped directories (:func:`_swap_dir`) → roll forward/back
-       per :func:`_recover_swap` (same contract as sinks.recover_merge).
+    3. half-swapped directories (:func:`fsutil.swap_in`) → roll
+       forward/back per :func:`fsutil.recover_swap`.
 
     Locking: ingest/compaction call this INSIDE their writer lease; a
     caller invoking it standalone (ops tooling) mutates state and must
@@ -850,7 +845,7 @@ def recover_state(spark: SparkSession, state_dir: str) -> dict[str, int]:
             if name.startswith(".staged-"):
                 fs.delete(_join(root, name), True)
                 actions["rolled_back"] += 1
-        if _recover_swap(fs, root) != "ok":
+        if recover_swap(fs, root, COMPACT) != "ok":
             actions["compact_settled"] += 1
     actions["recentroid_settled"] = _recover_recentroid(spark, fs, state_dir)
     for rel in STATE_ROOTS:
@@ -1403,7 +1398,7 @@ def _recover_recentroid(spark: SparkSession, fs: HadoopFS, state_dir: str) -> in
         return 0
     root = _join(state_dir, "semantic_members")
     fs.delete(root + ".recentroid-stage", True)  # pre-tmp leftover: never committed
-    _recover_swap(fs, root)
+    recover_swap(fs, root, COMPACT)
     want = json.loads(fs.read_text(nxt) or "{}").get("centroids_digest")
     tags = [n for n in fs.list_names(root) if n.startswith("_centroids-")]
     if want and any(n == f"_centroids-{want}" for n in tags):
@@ -1462,7 +1457,7 @@ def recentroid_state(
                 f"migrates an EXISTING state — run ingest_batch_semantic first"
             )
         root = _join(state_dir, "semantic_members")
-        _recover_swap(fs, root)
+        recover_swap(fs, root, COMPACT)
         if not fs.has_visible_files(root):
             raise ValueError(f"semantic state at {state_dir} has no member rows")
         digest = hashlib.md5(json.dumps(centroids).encode()).hexdigest()
@@ -1504,9 +1499,8 @@ def recentroid_state(
         fs.delete(stage, True)
         _staged_bucketed_write(reassigned, stage, ["cluster"], n_buckets)
         fs.touch_atomic(_join(stage, f"_centroids-{digest}"))
-        tmp = root + "._compact_tmp"
-        if fs.exists(tmp):
-            fs.delete(tmp, True)
+        tmp = root + COMPACT[0]
+        fs.delete(tmp, True)
         if not fs.rename(stage, tmp):
             raise IOError(f"recentroid: rename {stage} -> {tmp} failed")
         if _crash == "after_stage":
@@ -1514,7 +1508,7 @@ def recentroid_state(
 
         # 3. the compaction swap (crash from here on rolls FORWARD)
         n = spark.read.parquet(tmp).count()
-        _swap_dir(fs, root, tmp, _crash)
+        swap_in(fs, root, COMPACT, _crash)
         if _crash == "before_finalize":
             raise SimulatedCrash("before_finalize")
 
@@ -1777,51 +1771,6 @@ def compact_bloom_state(
 # ---------------------------------------------------------------------------
 
 
-def _recover_swap(fs: HadoopFS, root: str) -> str:
-    """Settle a crashed compaction swap at ``root`` deterministically —
-    the same four-state contract as sinks.recover_merge, over the Hadoop
-    FS: root present → clear leftovers; root missing + complete tmp →
-    roll forward; root missing + old → roll back."""
-    tmp, old = root + "._compact_tmp", root + "._compact_old"
-    if fs.exists(root):
-        for left in (tmp, old):
-            if fs.exists(left):
-                fs.delete(left, True)
-        return "ok"
-    if fs.exists(_join(tmp, "_SUCCESS")):
-        if not fs.rename(tmp, root):
-            raise IOError(f"recover_swap: rename {tmp} -> {root} failed")
-        if fs.exists(old):
-            fs.delete(old, True)
-        return "rolled_forward"
-    if fs.exists(old):
-        if not fs.rename(old, root):
-            raise IOError(f"recover_swap: rename {old} -> {root} failed")
-        if fs.exists(tmp):
-            fs.delete(tmp, True)
-        return "rolled_back"
-    return "absent"
-
-
-def _swap_dir(fs: HadoopFS, root: str, tmp: str, _crash: str | None = None) -> None:
-    """Swap the complete directory ``tmp`` in as ``root``: root →
-    ``._compact_old``, tmp → root, drop old. The only non-atomic window
-    (root renamed away, tmp not yet in) is settled by
-    :func:`_recover_swap` on the next touch: it rolls the complete tmp
-    forward. A missing root (a first sketch merge) just skips the first
-    rename."""
-    old = root + "._compact_old"
-    if fs.exists(old):
-        fs.delete(old, True)
-    if fs.exists(root) and not fs.rename(root, old):
-        raise IOError(f"swap: rename {root} -> {old} failed")
-    if _crash == "mid_swap":
-        raise SimulatedCrash("mid_swap")
-    if not fs.rename(tmp, root):
-        raise IOError(f"swap: rename {tmp} -> {root} failed")
-    fs.delete(old, True)
-
-
 def _compact_state(
     spark: SparkSession,
     state_dir: str,
@@ -1833,7 +1782,7 @@ def _compact_state(
     """Rewrite one bucketed state root with duplicates collapsed, then
     swap the new directory in. The swap's only non-atomic window (root
     renamed away, tmp not yet renamed in) is settled by
-    :func:`recover_state` / :func:`_recover_swap` on the next touch —
+    :func:`recover_state` / :func:`fsutil.recover_swap` on the next touch —
     roll forward (tmp is complete) — so a crash never loses the state.
     Single writer ENFORCED by the lease (appends landing between the
     distinct read and the swap would be lost). ``n_buckets`` resolves
@@ -1862,7 +1811,7 @@ def _compact_state(
                 f"the pinned value"
             )
         root = _join(state_dir, rel)
-        _recover_swap(fs, root)
+        recover_swap(fs, root, COMPACT)
         if not fs.has_visible_files(root):
             return 0
         if pinned is None and n_buckets is None:
@@ -1875,13 +1824,13 @@ def _compact_state(
                 f"build) to compact it"
             )
         n_buckets = int(pinned) if pinned is not None else int(n_buckets)
-        tmp = root + "._compact_tmp"
+        tmp = root + COMPACT[0]
         compacted = spark.read.parquet(root).distinct()
         # the rewrite goes through the bucketed writer so the swapped-in
         # files keep the bucket layout the state table's scans rely on
         _staged_bucketed_write(compacted, tmp, bucket_cols, n_buckets)
         n = spark.read.parquet(tmp).count()
-        _swap_dir(fs, root, tmp)
+        swap_in(fs, root, COMPACT)
         _refresh_state_table(spark, root)
         return n
 
@@ -1974,7 +1923,7 @@ def ingest_batch_sketch(
     crashed-and-retried or redelivered batch re-merges to the
     bit-identical state. The state swap uses the compaction state
     machine (stage bucketed → rename root away → rename stage in),
-    settled by :func:`_recover_swap` from any crash point; the epoch
+    settled by :func:`fsutil.recover_swap` from any crash point; the epoch
     marker records AFTER the swap — a crash between them replays the
     merge as a no-op and then records. ``k``/``n_buckets`` pin into
     ``_meta`` like every leg (a changed k would make sketches
@@ -2012,9 +1961,8 @@ def ingest_batch_sketch(
             group_col, "hv"
         )
         merged = kmv_group_sketches(old.unionByName(el), group_col, k=k_eff)
-        tmp = root + "._compact_tmp"
-        if fs.exists(tmp):
-            fs.delete(tmp, True)
+        tmp = root + COMPACT[0]
+        fs.delete(tmp, True)
         _staged_bucketed_write(merged, tmp, [group_col], n_buckets)
         if _crash == "after_stage":
             raise SimulatedCrash("after_stage")
@@ -2027,7 +1975,7 @@ def ingest_batch_sketch(
             .collect()[0]
         )
         n_rows, n_groups = int(row["n"]), int(row["g"])
-        _swap_dir(fs, root, tmp, _crash)
+        swap_in(fs, root, COMPACT, _crash)
         if _crash == "before_epoch":
             raise SimulatedCrash("before_epoch")
         if epoch_id is not None:

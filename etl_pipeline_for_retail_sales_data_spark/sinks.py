@@ -1,39 +1,91 @@
 """Sinks (SURVEY.md §2.8). Replace-semantics everywhere (L3): re-running a
 day must replace, not accumulate (reference TRUNCATE, scripts/loading.py:145).
+
+Publish contract of the file sinks. The reference loads in one
+transaction: truncate, insert, commit, or roll back so the previous table
+survives (scripts/loading.py:141-168). Here every output is first written
+in full to a staged sibling, then published by renames, so a reader sees
+either the previous output or the new one:
+
+- ``write_parquet`` and ``merge_parquet`` stage at ``path._merge_tmp``
+  and publish with :func:`fsutil.swap_in`: ``path`` → ``path._merge_old``,
+  stage → ``path``, drop old. A write that fails drops the stage and
+  leaves ``path`` untouched.
+- A process that dies between the two renames leaves ``path`` missing
+  and the previous copy at ``path._merge_old``. :func:`recover_merge`
+  settles that state for both sinks (rolling a complete stage forward,
+  else the old copy back); ``merge_parquet`` runs the same recovery
+  before it reads its target, so it never merges into a half-swapped
+  table.
+- ``write_csv_single_file`` stages its one part file under
+  ``path._spark_tmp`` and renames it over ``path``, atomic on ``file://``:
+  there is no moment with no file at ``path``.
+
+Renames are atomic on local filesystems and HDFS, not on S3A (see
+fsutil.py).
 """
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
+import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+from .fsutil import MERGE, HadoopFS, recover_swap, swap_in
+
+
+def _stage(spark, fs: HadoopFS, stage: str, write) -> None:
+    """Run ``write(stage)`` into a fresh ``stage``; a failed write removes
+    the stage and re-raises. A failed job returns while its other tasks
+    are still being killed, and a killed task can still touch its attempt
+    directory under the stage, so the removal first waits (at most a
+    minute) until the newest job of this thread's job group has no task
+    left."""
+    fs.delete(stage, True)
+    try:
+        write(stage)
+    except BaseException:
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        job = max(tracker.getJobIdsForGroup(sc.getLocalProperty("spark.jobGroup.id")), default=None)
+        deadline = time.monotonic() + 60
+        while job is not None and time.monotonic() < deadline:
+            info = tracker.getJobInfo(job)
+            if info is None or info.status != "RUNNING" and not any(
+                getattr(tracker.getStageInfo(s), "numActiveTasks", 0) for s in info.stageIds
+            ):
+                break
+            time.sleep(0.05)
+        fs.delete(stage, True)
+        raise
 
 
 def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    """The scale-path sink: partitioned parquet, full overwrite. At 100 TB
-    use partition_by on a low-cardinality column (e.g. date) so readers get
-    partition pruning; never coalesce(1) in the hot path."""
+    """The scale-path sink: partitioned parquet, full replace (staged,
+    then swapped in). At 100 TB use partition_by on a low-cardinality
+    column (e.g. date) so readers get partition pruning; never
+    coalesce(1) in the hot path."""
     w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
-    w.parquet(path)
+    fs = HadoopFS(df.sparkSession, path)
+    _stage(df.sparkSession, fs, path + MERGE[0], w.parquet)
+    swap_in(fs, path, MERGE)
 
 
 def write_csv_single_file(df: DataFrame, path: str) -> None:
     """L1 (reference scripts/loading.py:124-132): ONE csv file with header,
     full overwrite. Spark writes a directory; for the small summary output
-    we coalesce(1) and rename — explicitly NOT for large data (documented
-    deviation: big outputs use write_parquet)."""
+    we coalesce(1) and rename the part file over ``path`` — explicitly NOT
+    for large data (documented deviation: big outputs use write_parquet)."""
     tmp = path + "._spark_tmp"
-    df.coalesce(1).write.mode("overwrite").option("header", True).csv(tmp)
-    part = glob.glob(os.path.join(tmp, "part-*.csv"))[0]
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    if os.path.exists(path):
-        os.remove(path)
-    shutil.move(part, path)
-    shutil.rmtree(tmp)
+    fs = HadoopFS(df.sparkSession, tmp)
+    _stage(df.sparkSession, fs, tmp, df.coalesce(1).write.mode("overwrite").option("header", True).csv)
+    part = next(n for n in fs.list_names(tmp) if n.startswith("part-") and n.endswith(".csv"))
+    # the output carries no checksum sidecar
+    fs.delete(f"{tmp}/.{part}.crc", False)
+    fs.rename_replace(f"{tmp}/{part}", path)
+    fs.delete(tmp, True)
 
 
 def merge_parquet(spark, updates: DataFrame, path: str, key_cols: list[str]) -> None:
@@ -41,73 +93,41 @@ def merge_parquet(spark, updates: DataFrame, path: str, key_cols: list[str]) -> 
     update are replaced, everything else is kept. The reference's MySQL
     `INSERT ... ON DUPLICATE KEY UPDATE` (scripts/loading.py:24-32) is
     dead code behind a truncate; this is the live equivalent for a
-    file-native engine. Implementation: anti-join survivors ∪ updates,
-    write to a fresh directory, swap via two renames with the old data
-    kept until the new directory is in place — the crash window is one
-    rename, and the previous table survives as `path._merge_old` if the
-    process dies mid-swap (NOT a transaction: Delta/Iceberg MERGE is the
-    real answer where available). Local-filesystem paths only — remote
-    schemes are rejected rather than silently mis-merged."""
+    file-native engine. Implementation: settle any crashed swap, then
+    anti-join survivors ∪ updates, staged and swapped in as in the module
+    docstring (NOT a transaction: Delta/Iceberg MERGE is the real answer
+    where available). Local-filesystem paths only — remote schemes are
+    rejected rather than silently mis-merged."""
     if "://" in path:
         raise ValueError(
             f"merge_parquet swaps directories with local-FS renames; got {path!r}. "
             "Use a table format with native MERGE for remote filesystems."
         )
-    if os.path.isdir(path):
+    fs = HadoopFS(spark, path)
+    if recover_swap(fs, path, MERGE) != "absent":
         target = spark.read.parquet(path)
         survivors = target.join(updates.select(*key_cols).distinct(), on=key_cols, how="left_anti")
         out = survivors.unionByName(updates)
     else:
         out = updates
-    tmp = path + "._merge_tmp"
-    old = path + "._merge_old"
-    out.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    had_target = os.path.isdir(path)
-    if had_target:
-        os.rename(path, old)
-    os.rename(tmp, path)
-    if had_target:
-        shutil.rmtree(old)
+    _stage(spark, fs, path + MERGE[0], out.write.mode("overwrite").parquet)
+    swap_in(fs, path, MERGE)
 
 
 def recover_merge(path: str) -> str:
-    """Crash-window recovery for ``merge_parquet``: call on startup (or
-    when a reader finds ``path`` missing) to roll the swap forward or
-    back deterministically. The swap's only non-atomic window is between
-    the two renames, so the disk can be in exactly four states:
-
-    - ``path`` present → swap completed (or never started): clear any
-      leftover ``._merge_tmp`` / ``._merge_old`` → ``"ok"``.
-    - ``path`` missing, complete ``._merge_tmp`` (Spark's ``_SUCCESS``
-      marker present) → the merge output was fully committed before the
-      crash: promote tmp → ``"rolled_forward"``.
-    - ``path`` missing, incomplete/absent tmp, ``._merge_old`` present →
-      restore the previous table → ``"rolled_back"``.
-    - nothing at all → unrecoverable (never merged): raise.
-
-    Returns the action taken so callers can log it."""
-    tmp, old = path + "._merge_tmp", path + "._merge_old"
-    tmp_complete = os.path.isdir(tmp) and os.path.exists(os.path.join(tmp, "_SUCCESS"))
-    if os.path.isdir(path):
-        for leftover in (tmp, old):
-            if os.path.isdir(leftover):
-                shutil.rmtree(leftover)
-        return "ok"
-    if tmp_complete:
-        os.rename(tmp, path)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        return "rolled_forward"
-    if os.path.isdir(old):
-        os.rename(old, path)
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-        return "rolled_back"
-    raise FileNotFoundError(
-        f"recover_merge: no table, no complete ._merge_tmp, no ._merge_old at {path!r}"
-    )
+    """Crash-window recovery for ``merge_parquet`` and ``write_parquet``:
+    call on startup (or when a reader finds ``path`` missing) to roll the
+    swap forward or back deterministically, per
+    :func:`fsutil.recover_swap`'s four states. Returns ``"ok"``,
+    ``"rolled_forward"`` or ``"rolled_back"`` so callers can log it, and
+    raises ``FileNotFoundError`` when nothing is on disk (never written).
+    Needs a running Spark session (the filesystem is Hadoop's)."""
+    action = recover_swap(HadoopFS(SparkSession.active(), path), path, MERGE)
+    if action == "absent":
+        raise FileNotFoundError(
+            f"recover_merge: no table, no complete {MERGE[0]}, no {MERGE[1]} at {path!r}"
+        )
+    return action
 
 
 _DERBY_TYPES = {

@@ -3,9 +3,11 @@ optimistic concurrency, vacuum — the minimal slice of a table format
 (Delta/Iceberg) that upgrade parquet directories from "a pile of files"
 to "a sequence of atomic snapshots".
 
-Why the engine carries this: every replace/merge sink in `sinks.py`
-mutates files in place, so a reader racing a writer can see a half
-table, and yesterday's state is gone after today's run. A 100 TB
+Why the engine carries this: the replace/merge sinks in `sinks.py`
+stage each output and swap it in by renames, so a reader never sees a
+half-written table, but the swap deletes the previous files under a
+reader still scanning them, and yesterday's state is gone after today's
+run. A 100 TB
 pipeline needs (a) readers pinned to a consistent snapshot while writers
 land new data, (b) reproducible reads of past versions (train/eval sets
 cite a corpus VERSION, not a directory), and (c) blind-retry safety. All

@@ -449,12 +449,15 @@ def test_exact_form_forwards_salt_kwargs(spark):
         (r.doc_a, r.doc_b): (r.n_inter, r.jaccard)
         for r in D.ngram_jaccard_pairs(docs, threshold=0.0, max_df=None).collect()
     }
-    jobs_before = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+    tracker = spark.sparkContext.statusTracker()
+    # count job ids above the last one seen: the status store keeps only
+    # the newest spark.ui.retainedJobs, so list lengths can shrink
+    last = max(tracker.getJobIdsForGroup(None), default=-1)
     fwd_df = D.ngram_jaccard_pairs(
         docs, threshold=0.0, max_df=None, hot_df=3, n_salts=4
     )
-    jobs_after = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
-    assert len(jobs_after) == len(jobs_before)  # integer hot_df: no probe job
+    new_jobs = [j for j in tracker.getJobIdsForGroup(None) if j > last]
+    assert new_jobs == []  # integer hot_df: no probe job
     fwd = {(r.doc_a, r.doc_b): (r.n_inter, r.jaccard) for r in fwd_df.collect()}
     assert fwd == ref and len(ref) > 0
 

@@ -108,8 +108,11 @@ def test_pair_family_final_plan_counts(spark, sf_smoke, case):
     build, construct_jobs, expected = CASES[case]
     docs = load_table(spark, sf_smoke, "documents")
     tracker = spark.sparkContext.statusTracker()
-    jobs_before = len(tracker.getJobIdsForGroup(None))
+    # job ids rise monotonically; the status store keeps only the newest
+    # spark.ui.retainedJobs, so count ids above the last one seen rather
+    # than differencing the list's length
+    last = max(tracker.getJobIdsForGroup(None), default=-1)
     df = build(docs)
-    assert len(tracker.getJobIdsForGroup(None)) - jobs_before == construct_jobs
+    assert sum(1 for j in tracker.getJobIdsForGroup(None) if j > last) == construct_jobs
     df.collect()
     assert final_plan_counts(df) == expected

@@ -1,8 +1,12 @@
 """Sink semantics (SURVEY.md §2.8): replace-not-accumulate (L3), single-file
-CSV (L1), partitioned parquet as the scale path."""
+CSV (L1), partitioned parquet as the scale path; the staged publish (a
+failed write keeps the previous output, a crashed swap is recovered) and
+each sink's Spark job count."""
 
 import csv
 import os
+
+import pytest
 
 from etl_pipeline_for_retail_sales_data_spark import sinks
 from etl_pipeline_for_retail_sales_data_spark.queries_registry import QUERIES
@@ -111,3 +115,103 @@ def test_parquet_partitioned_roundtrip(spark, sf_smoke, tmp_path):
     # overwrite semantics
     sinks.write_parquet(ev.limit(10), out)
     assert spark.read.parquet(out).count() == 10
+
+
+def test_merge_parquet_after_unrecovered_crash_keeps_previous_rows(spark, tmp_path):
+    """A merge that starts while a torn swap is still on disk (``path``
+    moved to ._merge_old, an unfinished ._merge_tmp beside it) must first
+    restore the previous table, then merge into it — never treat the
+    table as absent and publish the updates alone."""
+    import shutil
+
+    path = str(tmp_path / "merged")
+    base = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k long, v string")
+    sinks.write_parquet(base, path)
+    tmp, old = path + "._merge_tmp", path + "._merge_old"
+    shutil.copytree(path, tmp)
+    os.remove(os.path.join(tmp, "_SUCCESS"))
+    os.rename(path, old)
+
+    updates = spark.createDataFrame([(4, "d")], "k long, v string")
+    sinks.merge_parquet(spark, updates, path, ["k"])
+    got = {r.k: r.v for r in spark.read.parquet(path).collect()}
+    assert got == {1: "a", 2: "b", 3: "c", 4: "d"}
+    assert not os.path.isdir(tmp) and not os.path.isdir(old)
+
+
+def _raise_on_three():
+    from pyspark.sql import functions as F
+
+    def check(k):
+        if k == 3:
+            raise ValueError("sink failure test")
+        return k
+
+    return F.udf(check, "long")
+
+
+def _siblings(tmp_path, name):
+    return sorted(n for n in os.listdir(tmp_path) if n != name)
+
+
+@pytest.mark.parametrize("partition_by", [None, ["p"]])
+def test_failed_write_parquet_keeps_previous_output(spark, tmp_path, partition_by):
+    """A write that fails part-way leaves the previous output readable
+    and unchanged, and no staged sibling behind."""
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "out")
+    base = spark.createDataFrame([(i, i % 2) for i in range(10)], "k long, p long")
+    sinks.write_parquet(base, path, partition_by=partition_by)
+    before = sorted(os.listdir(path))
+    bad = base.withColumn("k", _raise_on_three()(F.col("k")))
+    with pytest.raises(Exception, match="sink failure test"):
+        sinks.write_parquet(bad, path, partition_by=partition_by)
+    back = spark.read.parquet(path).select("k", "p").collect()
+    assert sorted(tuple(r) for r in back) == [(i, i % 2) for i in range(10)]
+    assert sorted(os.listdir(path)) == before
+    assert _siblings(tmp_path, "out") == []
+
+
+def test_failed_write_csv_keeps_previous_file(spark, tmp_path):
+    """A failed CSV write leaves the previous file byte-identical, with
+    no staging directory and no checksum sidecar beside it."""
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "summary.csv")
+    base = spark.createDataFrame([(i, i % 2) for i in range(10)], "k long, p long")
+    sinks.write_csv_single_file(base, path)
+    with open(path, "rb") as f:
+        before = f.read()
+    bad = base.withColumn("k", _raise_on_three()(F.col("k")))
+    with pytest.raises(Exception, match="sink failure test"):
+        sinks.write_csv_single_file(bad, path)
+    with open(path, "rb") as f:
+        assert f.read() == before
+    assert _siblings(tmp_path, "summary.csv") == []
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` runs: job ids rise monotonically and the status
+    store keeps only the newest spark.ui.retainedJobs, so count the ids
+    above the last one seen rather than differencing the list's length."""
+    tracker = spark.sparkContext.statusTracker()
+    last = max(tracker.getJobIdsForGroup(None), default=-1)
+    fn()
+    return sum(1 for j in tracker.getJobIdsForGroup(None) if j > last)
+
+
+def test_sink_job_counts(spark, sf_smoke, tmp_path):
+    """Each sink spends exactly the jobs of its write (plus, for merge,
+    the target's schema listing): staging and publishing add no job,
+    read-back or copy."""
+    summary = QUERIES["sales_summary"](spark, sf_smoke)
+    merged = str(tmp_path / "merged")
+    sinks.write_parquet(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"), merged)
+    updates = spark.createDataFrame([(2, "B"), (3, "c")], "k long, v string")
+    got = (
+        _jobs(spark, lambda: sinks.write_parquet(summary, str(tmp_path / "summary"))),
+        _jobs(spark, lambda: sinks.write_csv_single_file(summary, str(tmp_path / "summary.csv"))),
+        _jobs(spark, lambda: sinks.merge_parquet(spark, updates, merged, ["k"])),
+    )
+    assert got == (4, 4, 5)
