@@ -11911,21 +11911,6 @@ def q_corr_matrix_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bq_band_sql(col: str = "embedding", dim: int = 64, band_bits: int = 8) -> list[str]:
-    """DuckDB twins of operators/similarity.binary_quantize's band
-    expressions: integer sums of CASE-gated powers of two over the RAW
-    float components (strict > 0 — sign is cast-invariant, so the bits
-    are bit-reproducible across engines)."""
-    bands = []
-    for j in range(dim // band_bits):
-        terms = " + ".join(
-            f"(CASE WHEN {col}[{j * band_bits + kk + 1}] > 0 THEN {1 << kk} ELSE 0 END)"
-            for kk in range(band_bits)
-        )
-        bands.append(f"CAST({terms} AS BIGINT) AS band{j}")
-    return bands
-
-
 _BQ_BITS = 256
 _BQ_MAX_HAMMING = 112  # 0.4375 * 256; recall@5 0.98-1.00 at ~11% rerank scan
 _BQ_WORD_BITS = 32

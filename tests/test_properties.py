@@ -4,7 +4,7 @@ example — each example costs a Spark job."""
 
 import math
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -344,6 +344,7 @@ def test_distributed_rank_matches_python_sort(spark, rows, nparts):
         unique_by=lambda t: t[0],
     )
 )
+@example([("a", 409, 264), ("b", 352, 271), ("c", 145, 132)])  # micro-unit sum ends in 50
 def test_psi_from_counts_matches_python_formula(spark, rows):
     """Two-sample PSI == the straight-Python Σ(Δp)·ln(p-ratio) over the
     category intersection, with the same floor choreography, plus exact
@@ -365,15 +366,19 @@ def test_psi_from_counts_matches_python_formula(spark, rows):
     ref_total = sum(r for _, r, _ in rows)
     cur_total = sum(u for _, _, u in rows)
     f6 = lambda v: math.floor(v * 1e6 + 0.5) / 1e6
+    # integer micro-units, summed exactly as the engine does: a float sum
+    # can land just below a half (16150 micro-units summed to 161.4999...)
     terms = [
-        f6(
+        math.floor(
             (u / cur_total - r / ref_total)
             * math.log((u * ref_total) / (r * cur_total))
+            * 1e6
+            + 0.5
         )
         for _, r, u in rows
         if u > 0
     ]
-    expected_psi = math.floor(sum(terms) * 1e4 + 0.5) / 1e4 if terms else 0.0
+    expected_psi = math.floor(sum(terms) / 100 + 0.5) / 1e4 if terms else 0.0
     assert out.n_ref == ref_total and out.n_cur == cur_total
     assert abs(out.psi - expected_psi) < 1e-9
     assert out.ref_unmatched_frac == f6(
