@@ -21,11 +21,15 @@ no Python UDFs.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from ..cachectl import finalize_iterative, scoped_cache
 from ..functions import spread
+from .graph import collect_capped
 from .text import TOKEN_RE
 
 
@@ -557,15 +561,35 @@ def connected_components(
     min(component) picks the canonical document.
 
     Scale shape: each round is one equi-join of the label frame against
-    the symmetrized edge list + one min-aggregation — all shuffles keyed
-    on node id, so a co-partitioned layout is reused across rounds.
-    Rounds needed = graph diameter (near-dup components are shallow —
+    the symmetrized edge list + one min-aggregation + the join back onto
+    the labels. All are keyed on node id, but the checkpointed frames
+    carry no partitioning, so every round shuffles the labels twice and
+    the edge list once. Rounds needed = graph diameter (near-dup components are shallow —
     a handful). ONE action per round: the new label frame carries its
     own ``chg`` flag (did this node's label shrink?), so the
     convergence count both materializes the round's LAZY checkpoint and
     reads the fixpoint signal — no separate old-vs-new join job (which
     previously doubled the per-round job count).
+
+    Small graphs skip the Spark rounds: when at most
+    ``graph.CAP`` edges have both endpoints in ``nodes``, the driver
+    collects them and runs the same rounds with ``np.minimum.at`` (same
+    ``max_iter``, same stop when no label changes), so labels match the
+    Spark loop even when ``max_iter`` cuts a long chain short. An edge
+    with a null endpoint or one outside ``nodes`` moves no label on
+    either path; a node it touches keeps its own id, like a singleton.
+    The driver path persists nothing and returns ``nodes`` left-joined
+    to a local label frame; the Spark path returns a reliable
+    checkpoint.
     """
+    rows = collect_capped(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .join(nodes.select(F.col(id_col).alias("u")), "u", "left_semi")
+        .join(nodes.select(F.col(id_col).alias("v")), "v", "left_semi")
+    )
+    if rows is not None:
+        return _components_local(nodes, id_col, rows, max_iter)
+
     with scoped_cache() as scope:
         sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).unionAll(
             edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
@@ -621,6 +645,32 @@ def connected_components(
         # the fixpoint goes to a RELIABLE checkpoint (disk files, no
         # storage-pool blocks) before the scope releases its checkpoints
         return finalize_iterative(out)
+
+
+def _components_local(nodes: DataFrame, id_col: str, rows: list, max_iter: int) -> DataFrame:
+    """connected_components' min-label rounds in numpy over the collected
+    valid edges (either endpoint order: both directions propagate); codes
+    are sorted like the ids, so min code = min id."""
+    codes, ids = pd.factorize(np.array([r[0] for r in rows] + [r[1] for r in rows], dtype=object), sort=True)
+    a, b = codes[: len(rows)], codes[len(rows):]
+    u, v = np.concatenate([a, b]), np.concatenate([b, a])
+    comp = np.arange(len(ids))
+    for _ in range(max_iter):
+        new = comp.copy()
+        np.minimum.at(new, v, comp[u])
+        changed = bool((new != comp).any())
+        comp = new
+        if not changed:
+            break
+    id_type = nodes.schema[id_col].dataType
+    labels = nodes.sparkSession.createDataFrame(
+        pd.DataFrame({id_col: ids, "__comp": ids[comp]}),
+        StructType([StructField(id_col, id_type), StructField("__comp", id_type)]),
+    )
+    # every node outside the edge list is its own component
+    return nodes.select(id_col).join(labels, id_col, "left").select(
+        id_col, F.coalesce(F.col("__comp"), F.col(id_col)).alias("component_id")
+    )
 
 
 def simhash_candidates(

@@ -23,6 +23,8 @@ JVM's classes per JVM/Spark install and starts every later JVM from it:
 - *Archive present*: the JVM maps it (``-XX:SharedArchiveFile``).
 - *Archive missing*: the JVM dumps its classes at exit to a unique temp
   file (``-XX:ArchiveClassesAtExit``) and its pid is recorded beside it.
+  While a live JVM holds such a pending dump, other launches use no CDS
+  flags at all, so only one JVM pays for a dump.
   The next ``get_spark`` in any process promotes the dump to
   ``classes.jsa`` with ``os.replace`` once that JVM has exited, and deletes
   the archives kept under other keys. A dump or archive that does not start
@@ -39,7 +41,9 @@ JVM's classes per JVM/Spark install and starts every later JVM from it:
 - *Bad archive*: a launch given an archive whose JVM exits before the
   gateway comes up (a truncated archive crashes the JVM) deletes the
   archive and retries once without CDS. A stale or foreign archive is
-  ignored by the JVM itself.
+  ignored by the JVM itself. A JVM launched with CDS flags writes any
+  crash log (``-XX:ErrorFile``) to ``<key>/``, not to the working
+  directory; the retry deletes it with the archive.
 
 The flags go in ``spark.driver.defaultJavaOptions``, which the launcher puts
 before ``spark.driver.extraJavaOptions`` and ``--driver-java-options``, so
@@ -190,16 +194,20 @@ def _cds_plan(environ: Mapping[str, str]) -> _Cds | None:
         if not os.access(key_dir, os.W_OK):
             return None
         _promote(key_dir)
+        # a crash (a truncated archive) logs here, not in the caller's cwd
+        opts = f"{_CDS_QUIET} -XX:ErrorFile={key_dir}/hs_err_pid%p.log"
         archive = os.path.join(key_dir, _ARCHIVE)
         if os.path.isfile(archive):
             if _is_archive(archive):
-                return _Cds(f"-XX:SharedArchiveFile={archive} {_CDS_QUIET}", conf_dir, archive=archive)
+                return _Cds(f"-XX:SharedArchiveFile={archive} {opts}", conf_dir, archive=archive)
             os.remove(archive)
+        if glob.glob(os.path.join(key_dir, "dump-*.pid")):  # a live JVM is dumping
+            return None
         fd, pid_file = tempfile.mkstemp(prefix="dump-", suffix=".pid", dir=key_dir)
         with os.fdopen(fd, "w") as f:
             f.write(str(os.getpid()))  # until the JVM's own pid is known
         dump = pid_file[: -len(".pid")] + ".jsa"
-        return _Cds(f"-XX:ArchiveClassesAtExit={dump} {_CDS_QUIET}", conf_dir, pid_file=pid_file)
+        return _Cds(f"-XX:ArchiveClassesAtExit={dump} {opts}", conf_dir, pid_file=pid_file)
     except OSError:
         return None
 
@@ -234,6 +242,10 @@ def _builder(app_name: str) -> SparkSession.Builder:
         # (builder-time only — the cleaner reads it at startup)
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        # one corpus_pipelines pass generates 100-170 distinct classes;
+        # at the default 100 entries every pass recompiled most of them.
+        # Static, so a session the caller built keeps 100
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
 
 
@@ -254,7 +266,10 @@ def get_spark(app_name: str = "retail-sales-spark-engine") -> SparkSession:
     except PySparkRuntimeError as e:
         if cds.archive is None or e.getCondition() != "JAVA_GATEWAY_EXITED":
             raise
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(cds.archive)
+        # the archive and the crash log it caused
+        crash_logs = glob.glob(os.path.join(os.path.dirname(cds.archive), "hs_err_pid*.log"))
+        for path in (cds.archive, *crash_logs):
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(path)
         spark = _builder(app_name).getOrCreate()
     return configure_session(spark)

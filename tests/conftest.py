@@ -5,6 +5,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from etl_pipeline_for_retail_sales_data_spark.operators import graph  # noqa: E402
 from etl_pipeline_for_retail_sales_data_spark.session import get_spark  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -36,3 +37,12 @@ def sf_smoke():
 @pytest.fixture(scope="session")
 def sf_correct():
     return SF_CORRECT
+
+
+@pytest.fixture
+def spark_loop(monkeypatch):
+    """Force the Spark loop in pagerank and connected_components: with
+    graph.CAP at 0 no graph is solved on the driver, and no probe job runs.
+    Tests that take the driver path by default rerun under this fixture in
+    a ``TestSparkLoop`` class."""
+    monkeypatch.setattr(graph, "CAP", 0)

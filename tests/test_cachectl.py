@@ -118,3 +118,12 @@ def test_pagerank_failing_edge_udf_leaves_no_blocks(spark):
     with pytest.raises(Exception, match="bad edge"):
         pagerank(spark.range(4), edges.withColumn("dst", bad_dst("dst")))
     assert _persisted(spark) == base
+
+
+@pytest.mark.usefixtures("spark_loop")
+class TestSparkLoop:
+    """The PageRank tests above on the Spark loop, which persists and
+    checkpoints; the driver path they take by default persists nothing."""
+
+    test_pagerank_empty_nodes_leaves_no_blocks = staticmethod(test_pagerank_empty_nodes_leaves_no_blocks)
+    test_pagerank_failing_edge_udf_leaves_no_blocks = staticmethod(test_pagerank_failing_edge_udf_leaves_no_blocks)

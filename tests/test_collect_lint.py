@@ -30,6 +30,7 @@ BOUNDED_COLLECTS = {
     ("operators/clustering.py", "split_oversized_clusters"): "scalar aggregate (1 row) per split round",
     ("operators/clustering.py", "semantic_dedup"): "scalar aggregate (1 row)",
     ("operators/dedup.py", "posting_pairs"): "p99 document-frequency probe: scalar percentile (1 row)",
+    ("operators/graph.py", "collect_capped"): "limit(CAP + 1): pagerank's node and edge lists and connected_components' edge list; past CAP the Spark loop runs",
     ("operators/drift.py", "ks_drift"): "percentile_approx cutpoints: 1 row of ≤ n_buckets values",
     ("operators/pq.py", "_probe_dim"): "limit(1) dimensionality probe",
     ("operators/quality.py", "assert_checks"): "one row per configured CHECK (O(checks))",

@@ -368,6 +368,15 @@ def test_connected_components_empty_edges(spark):
     assert out == {1: 1, 2: 2}
 
 
+@pytest.mark.usefixtures("spark_loop")
+class TestSparkLoop:
+    """The components tests above on the Spark loop; without the fixture
+    their graphs are solved on the driver."""
+
+    test_connected_components_chain_and_singleton = staticmethod(test_connected_components_chain_and_singleton)
+    test_connected_components_empty_edges = staticmethod(test_connected_components_empty_edges)
+
+
 def test_knn_arrow_path_equals_expression_path(spark, sf_smoke):
     """The Arrow knn hot path (np.cumsum sequential fold) must be
     BIT-identical to the JVM expression twin — same ranks, same rounded

@@ -140,7 +140,7 @@ def test_scd2_collapses_runs_and_closes_intervals(spark):
 
 
 # -------------------------------------------------------------------- PageRank
-@pytest.fixture(scope="module")
+@pytest.fixture
 def pr_result(spark):
     nodes = spark.createDataFrame([(i,) for i in range(1, 7)], "id long")
     # 1<->2<->3 triangle-ish cluster, 4->5, 6 dangling
@@ -175,7 +175,7 @@ def test_pagerank_deterministic(spark, pr_result):
 
 
 def test_pagerank_fast_paths_bit_identical(spark, pr_result):
-    """r11 optimization pins: (a) assume_edges_valid=True (skip the two
+    """(a) assume_edges_valid=True (skip the two
     edge-validation semi-joins) is bit-identical when edges really are
     within the node set; (b) on a graph with NO dangling node the elided
     dangling-mass subtree leaves every rank bit-identical to the padded
@@ -306,6 +306,21 @@ def test_canonical_dedup_one_keeper_per_component(spark):
     assert [r for r in by_comp[4] if r.is_keeper][0].doc_id == 4
     # singletons keep themselves
     assert by_comp[6][0].is_keeper and by_comp[7][0].is_keeper
+
+
+@pytest.mark.usefixtures("spark_loop")
+class TestSparkLoop:
+    """The PageRank and canonical-dedup tests of this module on the Spark
+    loop; without the fixture their graphs are solved on the driver."""
+
+    test_pagerank_conserves_mass_and_positive = staticmethod(test_pagerank_conserves_mass_and_positive)
+    test_pagerank_ordering_reflects_structure = staticmethod(test_pagerank_ordering_reflects_structure)
+    test_pagerank_deterministic = staticmethod(test_pagerank_deterministic)
+    test_pagerank_fast_paths_bit_identical = staticmethod(test_pagerank_fast_paths_bit_identical)
+    test_new_ops_on_empty_inputs = staticmethod(test_new_ops_on_empty_inputs)
+    test_canonical_dedup_one_keeper_per_component = staticmethod(
+        test_canonical_dedup_one_keeper_per_component
+    )
 
 
 def test_interleave_n_three_dims_matches_python(spark):

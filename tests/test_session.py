@@ -53,7 +53,8 @@ def test_cds_plan_dumps_then_promotes_once_the_jvm_exits(env):
     assert key_dir == os.path.join(env["XDG_CACHE_HOME"], "spark-graft-cds", _cds_key(env["JAVA_HOME"], env["SPARK_HOME"]))
     assert cds.conf_dir == os.path.join(key_dir, "conf") and os.listdir(cds.conf_dir) == []
     dump = cds.pid_file[: -len(".pid")] + ".jsa"
-    assert cds.java_options.split() == [f"-XX:ArchiveClassesAtExit={dump}", "-Xlog:cds=off", "-Xlog:cds+dynamic=off"]
+    crash_log = f"-XX:ErrorFile={key_dir}/hs_err_pid%p.log"
+    assert cds.java_options.split() == [f"-XX:ArchiveClassesAtExit={dump}", "-Xlog:cds=off", "-Xlog:cds+dynamic=off", crash_log]
     with open(cds.pid_file) as f:
         assert f.read() == str(os.getpid())  # a running process: no promotion yet
     with open(dump, "wb") as f:
@@ -62,28 +63,40 @@ def test_cds_plan_dumps_then_promotes_once_the_jvm_exits(env):
     os.makedirs(stale)
     open(os.path.join(stale, "classes.jsa"), "wb").close()
 
-    second = _cds_plan(env)
-    assert second.archive is None and second.pid_file != cds.pid_file  # the first JVM still runs
+    assert _cds_plan(env) is None  # the first JVM still runs: no second dump
     assert os.path.isfile(dump) and os.path.isdir(stale)
-    killed = _cds_plan(env)
-    with open(killed.pid_file[: -len(".pid")] + ".jsa", "wb") as f:
+    killed = os.path.join(key_dir, "dump-killed.pid")
+    with open(killed[: -len(".pid")] + ".jsa", "wb") as f:
         f.write(b"\0" * 64)  # a JVM killed while dumping has not written the header yet
 
-    for pid_file in (cds.pid_file, second.pid_file, killed.pid_file):
+    for pid_file in (cds.pid_file, killed):
         with open(pid_file, "w") as f:
             f.write(str(_exited_pid()))
     third = _cds_plan(env)
     archive = os.path.join(key_dir, "classes.jsa")
     assert third.archive == archive and third.pid_file is None
-    assert third.java_options.split() == [f"-XX:SharedArchiveFile={archive}", "-Xlog:cds=off", "-Xlog:cds+dynamic=off"]
+    assert third.java_options.split() == [f"-XX:SharedArchiveFile={archive}", "-Xlog:cds=off", "-Xlog:cds+dynamic=off", crash_log]
     with open(archive, "rb") as f:
         assert f.read() == session._DYNAMIC_MAGIC + b"classes"
     assert sorted(os.listdir(key_dir)) == ["classes.jsa", "conf"]  # the bad dump and the pid files went
     assert not os.path.exists(stale)
 
 
+def test_cds_plan_launches_without_cds_while_a_live_jvm_dumps(env):
+    pending = _cds_plan(env).pid_file
+    key_dir = os.path.dirname(pending)
+    with open(pending, "w") as f:
+        f.write(str(os.getppid()))  # a live process that is not this one
+    before = sorted(os.listdir(key_dir))
+    assert _cds_plan(env) is None
+    assert sorted(os.listdir(key_dir)) == before  # nothing reserved, nothing promoted
+
+
 def test_cds_plan_replaces_a_garbage_archive_with_a_new_dump(env):
-    key_dir = os.path.dirname(_cds_plan(env).pid_file)
+    pid_file = _cds_plan(env).pid_file
+    with open(pid_file, "w") as f:
+        f.write(str(_exited_pid()))  # that JVM exited without dumping
+    key_dir = os.path.dirname(pid_file)
     archive = os.path.join(key_dir, "classes.jsa")
     with open(archive, "wb") as f:
         f.write(os.urandom(4096))
@@ -205,6 +218,7 @@ def test_cds_archive_life_cycle_in_fresh_jvms(tmp_path):
     assert shared["files"] == ["classes.jsa"]
 
     assert fallback["args"] == [] and fallback["files"] == []
+    assert not list(tmp_path.glob("hs_err_pid*.log"))  # the crash logged under the cache, not in the cwd
 
 
 def test_python_udf_workers_import_the_package_from_any_cwd(tmp_path):
